@@ -1834,28 +1834,29 @@ def q47_stratified_sample(spark, sf_dir):
     return text.stratified_sample(d, ["lang"], "doc_id", cap=40)
 
 
-# -- portable-hash twins (ARCHITECTURE 7b) -------
+# -- portable-hash family (ARCHITECTURE 7b) -------
 
 def q21_minhash_pairs(spark, sf_dir):
-    """MinHash-LSH near-dup pairs, portable-hash variant: every hash is
-    seeded int64 arithmetic replicated literally in the DuckDB oracle, so
-    the WHOLE pipeline — signatures, band buckets, candidate set, exact
-    Jaccard verify — is oracle-checked bit-for-bit (not rows-only).  The
-    production kernel impl (crc32+numpy, ~2x faster) is benchmarked
-    separately in bench.py."""
+    """MinHash-LSH near-dup pairs through the library operator.  Its
+    signatures are the portable hash family — seeded int64 arithmetic
+    the DuckDB oracle replicates literally — so the WHOLE pipeline
+    (signatures, band buckets, candidate set, exact Jaccard verify) is
+    oracle-checked bit-for-bit, and it is the function bench.py times.
+    Jaccard is rounded to 6 places, as the oracle rounds it."""
     d = _t(spark, sf_dir, "documents")
-    out = dedup.minhash_lsh_pairs_portable(
+    out = dedup.minhash_lsh_pairs(
         d, "text", "doc_id", num_perm=64, bands=8, shingle=6, threshold=0.5)
-    return out.select("id_a", "id_b", "jaccard")
+    return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 
 def q22_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup pairs, portable-hash variant: signatures, band
-    blocking and positional hamming are seeded int64 arithmetic replicated
-    literally in the DuckDB oracle — oracle-checked bit-for-bit.  The
-    production kernel impl (blake2b+numpy) stays the library default."""
+    """SimHash near-dup pairs through the library operator: portable-hash
+    signatures, band blocking and hamming are replicated literally in the
+    DuckDB oracle — oracle-checked bit-for-bit.  The oracle caps no
+    bucket, so neither does the gate (max_bucket=None)."""
     d = _t(spark, sf_dir, "documents")
-    return dedup.simhash_near_pairs_portable(d, "text", "doc_id", max_hamming=8)
+    return dedup.simhash_near_pairs(d, "text", "doc_id", max_hamming=8,
+                                    max_bucket=None)
 
 
 def q23_lsh_topk(spark, sf_dir):

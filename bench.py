@@ -72,16 +72,6 @@ def run_benchmark():
         "q21_minhash_pairs", "q25_pip_join_full",
     ]
     qs = dict(entry.queries())
-    # the q21 GATE query runs the portable-hash twin (oracle-replicable but
-    # ~2x slower); the bench measures the production kernel impl — same
-    # operator, same output rows, the impl a deployment would run
-    from karta_spark.operators import dedup as _dedup
-
-    def _q21_kernel(spark, sf_dir):
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return _dedup.minhash_lsh_pairs(d, "text", "doc_id", num_perm=64,
-                                        bands=8, shingle=6, threshold=0.5)
-    qs["q21_minhash_pairs"] = _q21_kernel
     # JVM/codegen warm-up outside the timed region (a cold session charges
     # ~4s of class loading to whichever query runs first)
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()

@@ -31,18 +31,9 @@ HEADLINE = [
 ]
 
 
-def _qs(spark):
+def _qs():
     import __spark_entry__ as entry
-    from karta_spark.operators import dedup as _dedup
-
-    qs = dict(entry.queries())
-
-    def _q21_kernel(spark, sf_dir):
-        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return _dedup.minhash_lsh_pairs(d, "text", "doc_id", num_perm=64,
-                                        bands=8, shingle=6, threshold=0.5)
-    qs["q21_minhash_pairs"] = _q21_kernel
-    return qs
+    return entry.queries()
 
 
 def _noop(df):
@@ -57,7 +48,7 @@ def get_session():
 
 def time_queries(only=None, runs=2):
     spark = get_session()
-    qs = _qs(spark)
+    qs = _qs()
     names = [n for n in HEADLINE if only is None or n == only]
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     times = {}
@@ -79,7 +70,7 @@ def time_queries(only=None, runs=2):
 def dump_plans(tag: str, only=None):
     os.makedirs("plans/r08", exist_ok=True)
     spark = get_session()
-    qs = _qs(spark)
+    qs = _qs()
     names = [n for n in HEADLINE if only is None or n == only]
     for name in names:
         df = qs[name](spark, SF_DIR)

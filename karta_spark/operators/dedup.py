@@ -148,66 +148,97 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
+#
+# One hash family, two backends (ARCHITECTURE.md §7b).  Every hash is plain
+# int64 arithmetic over Unicode code points:
+#
+#   gram hash   h(g)   = per-step ((acc % p)*131 + code(g_i)), then % p
+#   permutation h_j(g) = (a_j * h(g) + b_j) % p,    p = 2^31 - 1
+#
+# with (a_j, b_j) drawn from a seeded PRNG at plan-build time.  The batched
+# numpy kernel (_minhash_sig_batch) is the operator; minhash_portable_sql
+# evaluates the same literals in DuckDB and is the oracle (q21), so the
+# gate checks the code the bench times, LSH candidate set included.
 
-def _minhash_params(num_perm: int, seed: int = 42):
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, 1 << 62, size=num_perm, dtype=np.uint64) | np.uint64(1)  # odd
-    b = rng.integers(0, 1 << 62, size=num_perm, dtype=np.uint64)
+_PORTABLE_P = 2147483647  # 2^31 - 1: a_j*h + b_j < 2^62 — no int64 overflow
+_P64 = np.uint64(_PORTABLE_P)
+
+
+def _portable_perm_params(num_perm: int, seed: int):
+    import random as _random
+    rng = _random.Random(seed)
+    a = [rng.randrange(1, _PORTABLE_P) for _ in range(num_perm)]
+    b = [rng.randrange(0, _PORTABLE_P) for _ in range(num_perm)]
     return a, b
 
 
-_SHINGLE_P = np.uint64(1099511628211)  # FNV-64 prime, odd => bijective mults
-_SHINGLE_POWS: dict[int, np.ndarray] = {}
+def portable_gram_hash_sql(gram: str, n: int) -> str:
+    """Polynomial rolling hash over the n chars of an rpad'ed gram — the
+    SAME fragment parses as a Spark SQL expression and as DuckDB SQL.
+    The mod at EVERY step keeps the accumulator < 2^31 * 131 + 0x10FFFF
+    < 2^63 for any n (without it, n >= 8 overflows int64 — silently
+    wrapping in non-ANSI Spark while DuckDB errors, which would break
+    the cross-engine bit-reproducibility this family exists for)."""
+    expr = f"CAST(ascii(substr({gram},1,1)) AS BIGINT)"
+    for i in range(2, n + 1):
+        expr = f"((({expr}) % {_PORTABLE_P})*131 + ascii(substr({gram},{i},1)))"
+    return f"(({expr}) % {_PORTABLE_P})"
 
 
-def _shingle_hashes(text: str, n: int) -> np.ndarray:
-    """Distinct character n-gram hashes — vectorized uint64 polynomial
-    hash h(g) = sum g[k] * P^k (wraparound): one strided multiply-add
-    pass over the byte array + np.unique, measured 2.2x faster than the
-    previous per-gram crc32 loop (and 64-bit, so gram collisions are
-    negligible at any corpus size)."""
-    raw = (text or "").encode("utf-8", "ignore")
-    # pad AFTER encoding: 'ignore' can shrink the bytes below n even when
-    # the str was long enough (lone surrogates encode to b''), and a
-    # negative L would crash np.zeros below
-    if len(raw) < n:
-        raw = raw + b"\x00" * (n - len(raw))
-    bs = np.frombuffer(raw, dtype=np.uint8)
-    L = len(bs) - n + 1
-    pows = _SHINGLE_POWS.get(n)
-    if pows is None:
-        pows = _SHINGLE_P ** np.arange(n, dtype=np.uint64)
-        _SHINGLE_POWS[n] = pows
-    acc = np.zeros(L, dtype=np.uint64)
-    for k in range(n):
-        acc += bs[k:k + L].astype(np.uint64) * pows[k]
-    return np.unique(acc)
+def _mod_p(x: np.ndarray, tmp: np.ndarray) -> np.ndarray:
+    """x % p in place for uint64 x < p * 2^31 (*tmp*: same-shape scratch).
+
+    One Mersenne fold y = (x & p) + (x >> 31) keeps y == x (mod p) with
+    y <= 2p - 1 under that bound; min(y, y - p) then picks y - p when
+    y >= p, and y otherwise (then y - p wraps around to near 2^64)."""
+    np.right_shift(x, 31, out=tmp)
+    np.bitwise_and(x, _P64, out=x)
+    np.add(x, tmp, out=x)
+    np.subtract(x, _P64, out=tmp)
+    np.minimum(x, tmp, out=x)
+    return x
 
 
-def _minhash_sig_batch(texts, shingle: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(n_docs, num_perm) int64 signature matrix for a whole Arrow batch —
-    bit-identical to the per-doc form min((a*h + b) mod 2^64) over
-    ``_shingle_hashes`` (pinned by test_minhash_batch_kernel).
+def _code_points(strings) -> np.ndarray:
+    """uint64 Unicode code points of the concatenated *strings*.  Lone
+    surrogates pass through as their own code unit, as ``ord`` sees them."""
+    raw = "".join(strings).encode("utf-32-le", "surrogatepass")
+    return np.frombuffer(raw, dtype=np.uint32).astype(np.uint64)
 
-    Vectorization (guide §4.2), with the exactness argument per step:
 
-    - every doc's utf-8 bytes concatenate into ONE buffer and the
-      polynomial window hash runs over it in ``shingle`` strided passes;
-      only within-doc window positions are gathered, so each doc sees
-      exactly the hash values ``_shingle_hashes`` computes (same pows,
-      same uint64 wraparound), minus the np.unique — dropping distinct-
-      ness cannot change a MIN over the same multiset;
+def _poly_hash(chars) -> np.ndarray:
+    """Portable gram hash of many grams at once: ``chars[k]`` holds the
+    k-th code point of every gram (uint64, equal lengths)."""
+    acc = np.array(chars[0], dtype=np.uint64)
+    tmp = np.empty_like(acc)
+    for c in chars[1:]:
+        _mod_p(acc, tmp)
+        acc *= np.uint64(131)
+        acc += c
+    return _mod_p(acc, tmp)
+
+
+def _minhash_sig_batch(texts, shingle: int, a, b) -> np.ndarray:
+    """(n_docs, num_perm) int64 portable MinHash signatures for a whole
+    Arrow batch — the ``sig`` CTE of minhash_portable_sql, bit for bit.
+
+    Grams follow the SQL: every length-``shingle`` window of the text's
+    code points, and a text shorter than that (None and "" included) is
+    one gram rpad'ed with chr(1).  Vectorization (guide §4.2):
+
+    - every doc's code points concatenate into ONE buffer and the gram
+      hash runs over it in ``shingle`` strided passes; only within-doc
+      windows are gathered.  The SQL's DISTINCT is skipped — it cannot
+      change a MIN over the same multiset;
     - docs are processed in length-bucketed groups as 2D padded matrices
       (padding repeats the doc's LAST window hash — a duplicate of a real
-      value, again invisible to min), bounding padding waste at 2x and
-      amortizing the numpy dispatch the per-doc loop paid 64 times per
-      doc (measured 84 -> 52 us/doc on the 50k-doc bench corpus);
-    - the affine min uses in-place temporaries per 256-row block (cache-
-      resident; measured 81 -> 46 us/doc on an unbucketed matrix)."""
+      value, again invisible to min), bounding padding waste at 2x;
+    - the affine min uses in-place temporaries per 256-row block, and the
+      mod p is a Mersenne fold (``_mod_p``), not a division."""
+    a = np.asarray(a, dtype=np.uint64)
+    b = np.asarray(b, dtype=np.uint64)
     # process in ~1k-doc chunks: the concatenated-buffer temporaries stay
-    # L2-resident, so 32 concurrent workers do not fight for DRAM bandwidth
-    # (the first whole-batch form was 2.6x faster single-process but
-    # bandwidth-bound at task concurrency)
+    # L2-resident, so concurrent workers do not fight for DRAM bandwidth
     if len(texts) > 1024:
         parts = [_minhash_sig_batch(texts[i:i + 1024], shingle, a, b)
                  for i in range(0, len(texts), 1024)]
@@ -218,26 +249,13 @@ def _minhash_sig_batch(texts, shingle: int, a: np.ndarray, b: np.ndarray) -> np.
         # an empty Arrow batch (empty partition / upstream filter) must not
         # reach the concatenated-buffer math (n_win would go negative)
         return np.empty((0, num_perm), dtype=np.int64)
-    blobs = []
-    for t in texts:
-        raw = (t or "").encode("utf-8", "ignore")
-        if len(raw) < shingle:
-            # pad AFTER encoding — same rule (and reason) as _shingle_hashes
-            raw = raw + b"\x00" * (shingle - len(raw))
-        blobs.append(raw)
-    lens = np.fromiter((len(x) for x in blobs), dtype=np.int64, count=D)
-    buf = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    padded = [(t or "").ljust(shingle, "\x01") for t in texts]
+    lens = np.fromiter((len(t) for t in padded), dtype=np.int64, count=D)
     starts = np.zeros(D, dtype=np.int64)
     np.cumsum(lens[:-1], out=starts[1:])
-    n_win = buf.shape[0] - shingle + 1
-    pows = _SHINGLE_POWS.get(shingle)
-    if pows is None:
-        pows = _SHINGLE_P ** np.arange(shingle, dtype=np.uint64)
-        _SHINGLE_POWS[shingle] = pows
-    acc = np.zeros(n_win, dtype=np.uint64)
-    b64 = buf.astype(np.uint64)
-    for k in range(shingle):
-        acc += b64[k:k + n_win] * pows[k]
+    cp = _code_points(padded)
+    n_win = cp.shape[0] - shingle + 1
+    hashes = _poly_hash([cp[k:k + n_win] for k in range(shingle)])
     win_per_doc = lens - shingle + 1  # >= 1 after padding
     sig = np.empty((D, num_perm), dtype=np.uint64)
     order = np.argsort(win_per_doc, kind="stable")
@@ -252,13 +270,14 @@ def _minhash_sig_batch(texts, shingle: int, a: np.ndarray, b: np.ndarray) -> np.
         m = int(win_per_doc[sel].max())
         col = np.arange(m, dtype=np.int64)[None, :]
         idx = starts[sel][:, None] + np.minimum(col, (win_per_doc[sel] - 1)[:, None])
-        hv = acc[idx]
+        hv = hashes[idx]
+        x = np.empty_like(hv)
         tmp = np.empty_like(hv)
         out = sig[sel]
         for j in range(num_perm):
-            np.multiply(hv, a[j], out=tmp)
-            np.add(tmp, b[j], out=tmp)
-            tmp.min(axis=1, out=out[:, j])
+            np.multiply(hv, a[j], out=x)
+            np.add(x, b[j], out=x)
+            _mod_p(x, tmp).min(axis=1, out=out[:, j])
         sig[sel] = out
         g = e
     return sig.view(np.int64)
@@ -268,13 +287,10 @@ def minhash_signatures(
     df: DataFrame, text_col: str, id_col: str,
     num_perm: int = 64, shingle: int = 3, seed: int = 42,
 ) -> DataFrame:
-    """(id, sig: array<long>) MinHash signatures.
-
-    Permutation family: odd-multiplier wraparound affine maps on uint64
-    ((a*h + b) mod 2^64) — a standard practical MinHash family, computed
-    batch-at-a-time by ``_minhash_sig_batch`` (bit-identical to the
-    per-doc num_perm x n_shingles matrix form it replaced)."""
-    a, b = _minhash_params(num_perm, seed)
+    """(id, sig: array<long>) portable MinHash signatures, computed
+    batch-at-a-time by ``_minhash_sig_batch`` in a pandas UDF; each value
+    equals the DuckDB twin's ``m{j}`` column (minhash_portable_sql)."""
+    a, b = _portable_perm_params(num_perm, seed)
 
     @F.pandas_udf(ArrayType(LongType()))
     def sig_udf(texts: pd.Series) -> pd.Series:
@@ -282,33 +298,6 @@ def minhash_signatures(
         return pd.Series(list(sig))
 
     return df.select(F.col(id_col).alias("id"), sig_udf(F.col(text_col)).alias("sig"))
-
-
-def minhash_signatures_expr(
-    df: DataFrame, text_col: str, id_col: str,
-    num_perm: int = 64, shingle: int = 3,
-) -> DataFrame:
-    """(id, sig: array<long>) MinHash signatures — pure Catalyst, zero
-    Python.
-
-    Permutation family: independent seeded hashes h_j(g) =
-    xxhash64(j, gram) — the 'one hash function per permutation' MinHash
-    formulation; min is taken in UNSIGNED order by flipping the sign bit
-    (longs compare signed in the JVM).  The whole sketch is
-    explode(ngrams) -> groupBy(id) with num_perm min-aggregates: map-side
-    partial aggregation means the shuffle carries num_perm longs per doc
-    per mapper, never the grams.  Under ANSI mode (overflow throws) this
-    family also avoids the wraparound multiply the affine family needs."""
-    sh = df.select(F.col(id_col).alias("id"),
-                   F.explode(ngrams(F.col(text_col), shingle)).alias("gram"))
-    sign = F.lit(-0x8000000000000000)
-    aggs = [
-        F.min(F.xxhash64(F.lit(j), F.col("gram")).bitwiseXOR(sign)).alias(f"_m{j}")
-        for j in range(num_perm)
-    ]
-    sigs = sh.groupBy("id").agg(*aggs)
-    return sigs.select(
-        "id", F.array(*[F.col(f"_m{j}") for j in range(num_perm)]).alias("sig"))
 
 
 def _drop_oversized_buckets(banded: DataFrame, keys, max_bucket: int | None) -> DataFrame:
@@ -388,36 +377,31 @@ def minhash_lsh_pairs(
     df: DataFrame, text_col: str, id_col: str,
     num_perm: int = 64, bands: int = 16, shingle: int = 3,
     threshold: float = 0.5, seed: int = 42, verify: bool = True,
-    impl: str = "kernel", max_bucket: int | None = 4096,
+    max_bucket: int | None = 4096,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash LSH, optionally verified with exact
     n-gram Jaccard on candidates only (the classic shingle->minhash->band->
     bucket-join pipeline).
 
-    impl="kernel" (default): Arrow/numpy signatures — MEASURED 2x faster
-    end-to-end than the pure-Catalyst variant on this box (numpy's SIMD
-    affine mins beat 64 JVM string hashes per gram; sig stage 0.15 s vs
-    2.8 s at sf0.1).  impl="expr" stays available for zero-Python
-    deployments (no Python workers / streaming state contexts).
+    Signatures are the portable family (``minhash_signatures``).  Bands
+    key on xxhash64 of each signature slice, where minhash_portable_sql
+    keys on the slice's text: equal slices meet in one bucket either way,
+    so with the guard off both backends emit the same candidates (up to a
+    2^-64 bucket collision) and the same verified pairs (q21).
 
     ``max_bucket``: a (band, bucket) holding f docs emits f^2/2 candidate
-    pairs from the self-join — one boilerplate-heavy bucket with 10^6
-    near-identical docs is quadratic death at corpus scale.  Buckets
-    larger than max_bucket are dropped (broadcast anti-join on the tiny
-    oversized-bucket set) before the self-join; a bucket that size means
-    near-identical mass that exact_dedup/cluster_representatives should
-    absorb first.  Normal corpora never hit the cap, so pairs are
-    unchanged; None disables the guard."""
+    pairs — one boilerplate-heavy bucket with 10^6 near-identical docs is
+    quadratic death at corpus scale.  Buckets larger than max_bucket
+    contribute no candidates; a bucket that size means near-identical
+    mass that exact_dedup/cluster_representatives should absorb first.
+    Normal corpora never hit the cap, so pairs are unchanged; None
+    disables the guard."""
     from karta_spark.plans.layout import ensure_min_parallelism
 
     # an unsplittable single-file corpus scans as ONE task, serializing
-    # the Arrow signature kernel (and the gram explode of the expr path);
-    # no-op when the input is already parallel
+    # the Arrow signature kernel; no-op when the input is already parallel
     df = ensure_min_parallelism(df)
-    if impl == "expr":
-        sigs = minhash_signatures_expr(df, text_col, id_col, num_perm, shingle)
-    else:
-        sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle, seed)
+    sigs = minhash_signatures(df, text_col, id_col, num_perm, shingle, seed)
     banded = _band_buckets(sigs, num_perm, bands)
     # Grouped posting-list candidate plan (same shape as the q17 n-gram
     # pipeline): ONE groupBy((band, bucket)) builds the sorted member
@@ -453,7 +437,8 @@ def minhash_lsh_pairs(
     # exact-Jaccard verify as pure Catalyst set algebra (array_intersect /
     # array_union on distinct shingle arrays) — zero Python on the verify
     # path; a short text (len < shingle) contributes its single truncated
-    # gram, identical to the previous kernel's frozenset rule
+    # gram, where the SQL twin rpads it with chr(1) — the same set sizes
+    # and intersections unless a text itself contains chr(1)
     def gram_set(col):
         t = F.coalesce(col, F.lit(""))
         idx = F.sequence(F.lit(1),
@@ -470,128 +455,15 @@ def minhash_lsh_pairs(
     )
 
 
-# ---------------------------------------------------------------------------
-# MinHash + LSH, portable-hash variant (engine-agnostic arithmetic)
-# ---------------------------------------------------------------------------
-#
-# The kernel/expr variants above hash with crc32/xxhash64 — fast but
-# engine-specific, so their candidate sets can't be replicated by an
-# external SQL engine.  The *portable* variant below derives every hash
-# from plain int64 arithmetic over character codes:
-#
-#   gram hash   h(g)   = (sum_i code(g_i) * 131^(n-i)) mod (2^31 - 1)
-#   permutation h_j(g) = (a_j * h(g) + b_j) mod (2^31 - 1)
-#
-# with (a_j, b_j) drawn from a seeded PRNG at plan-build time and embedded
-# as literals.  Every step — gram extraction, hashing, min-aggregation,
-# band bucketing, candidate join, exact-Jaccard verify — is expressible
-# identically in Spark SQL and ANSI SQL (DuckDB), so the FULL pipeline,
-# including which near-threshold pairs the LSH probabilistically finds,
-# is bit-reproducible across engines.  That moves the whole operator
-# under an exact external oracle instead of a rows-only check.
-
-_PORTABLE_P = 2147483647  # 2^31 - 1: a_j*h + b_j < 2^62 — no int64 overflow
-
-
-def _portable_perm_params(num_perm: int, seed: int):
-    import random as _random
-    rng = _random.Random(seed)
-    a = [rng.randrange(1, _PORTABLE_P) for _ in range(num_perm)]
-    b = [rng.randrange(0, _PORTABLE_P) for _ in range(num_perm)]
-    return a, b
-
-
-def portable_gram_hash_sql(gram: str, n: int) -> str:
-    """Polynomial rolling hash over the n chars of an rpad'ed gram — the
-    SAME fragment parses as a Spark SQL expression and as DuckDB SQL.
-    The mod at EVERY step keeps the accumulator < 2^31 * 131 + 0xFFFF
-    < 2^63 for any n (without it, n >= 8 overflows int64 — silently
-    wrapping in non-ANSI Spark while DuckDB errors, which would break
-    the cross-engine bit-reproducibility this family exists for)."""
-    expr = f"CAST(ascii(substr({gram},1,1)) AS BIGINT)"
-    for i in range(2, n + 1):
-        expr = f"((({expr}) % {_PORTABLE_P})*131 + ascii(substr({gram},{i},1)))"
-    return f"(({expr}) % {_PORTABLE_P})"
-
-
-def _portable_grams(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
-    """(id, gram) distinct rpad'ed char n-grams; text shorter than n yields
-    one chr(1)-padded gram (mirrors _shingle_hashes' padding rule)."""
-    gram_expr = (
-        f"transform(sequence(1, greatest(length(coalesce({text_col}, '')) - {n - 1}, 1)),"
-        f" i -> rpad(substring(coalesce({text_col}, ''), i, {n}), {n}, chr(1)))"
-    )
-    return (
-        df.select(F.col(id_col).alias("id"), F.explode(F.expr(gram_expr)).alias("gram"))
-        .distinct()
-    )
-
-
-def minhash_lsh_pairs_portable(
-    df: DataFrame, text_col: str, id_col: str,
-    num_perm: int = 64, bands: int = 8, shingle: int = 6,
-    threshold: float = 0.5, seed: int = 42,
-) -> DataFrame:
-    """minhash_lsh_pairs with engine-portable hashing (see section note).
-
-    Pure Catalyst end-to-end: explode grams -> hash -> num_perm min-aggs
-    (map-side partial agg: the shuffle carries num_perm ints per doc) ->
-    band-bucket equi-join -> exact-Jaccard verify on candidates only via a
-    gram equi-join.  Zero Python rows; zero UDFs."""
-    p = _PORTABLE_P
-    a, b = _portable_perm_params(num_perm, seed)
-    r = num_perm // bands
-    grams = _portable_grams(df, text_col, id_col, shingle)
-    hashed = grams.withColumn("h", F.expr(portable_gram_hash_sql("gram", shingle)))
-    sig = hashed.groupBy("id").agg(*[
-        F.min((F.lit(a[j]) * F.col("h") + F.lit(b[j])) % F.lit(p)).alias(f"m{j}")
-        for j in range(num_perm)
-    ])
-    banded = sig.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.concat_ws(",", *[F.col(f"m{i * r + k}") for k in range(r)]).alias("bucket"),
-            )
-            for i in range(bands)
-        ])).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    ba, bb = banded.alias("a"), banded.alias("b")
-    cand = (
-        ba.join(bb, (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    sz = grams.groupBy("id").agg(F.count("*").alias("sz"))
-    ga = grams.select(F.col("id").alias("id_a"), F.col("gram").alias("_ga"))
-    gb = grams.select(F.col("id").alias("_gid_b"), F.col("gram").alias("_gb"))
-    inter = (
-        cand.join(ga, "id_a")
-        .join(gb, (F.col("id_b") == F.col("_gid_b")) & (F.col("_ga") == F.col("_gb")))
-        .groupBy("id_a", "id_b").agg(F.count("*").alias("_i"))
-    )
-    jac = F.round(
-        F.col("_i").cast("double")
-        / (F.col("sa.sz") + F.col("sb.sz") - F.col("_i")), 6)
-    return (
-        inter
-        .join(sz.alias("sa"), F.col("id_a") == F.col("sa.id"))
-        .join(sz.alias("sb"), F.col("id_b") == F.col("sb.id"))
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
 def minhash_portable_sql(
     table: str, text_col: str, id_col: str,
     num_perm: int = 64, bands: int = 8, shingle: int = 6,
     threshold: float = 0.5, seed: int = 42,
 ) -> str:
-    """DuckDB twin of minhash_lsh_pairs_portable — same literals, same
-    arithmetic, bit-identical candidates and Jaccard values."""
+    """DuckDB twin of minhash_lsh_pairs (the q21 oracle) — same literals
+    and arithmetic: its ``sig`` CTE equals ``_minhash_sig_batch`` bit for
+    bit, and its candidates and Jaccard values equal the operator's with
+    ``max_bucket=None`` (Jaccard rounded to 6 places)."""
     p = _PORTABLE_P
     a, b = _portable_perm_params(num_perm, seed)
     r = num_perm // bands
@@ -641,69 +513,67 @@ WHERE round(CAST(i.i AS DOUBLE) / (sa.sz + sb.sz - i.i), 6) >= {threshold}
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
+#
+# The same portable family (§7b).  Tokens split on single spaces with the
+# empties dropped (multiplicity counts); a token hashes its first 12 code
+# points rpad'ed with chr(1); bit k's weight for token hash h is
+# 2*(((a_k*h + b_k) % p) % 2) - 1, and the doc's bit k is 1 iff the summed
+# weight is > 0 (ties and empty docs -> 0).  The numpy kernel
+# (_simhash_batch) is the operator; simhash_portable_sql is the oracle (q22).
 
-def simhash(df: DataFrame, text_col: str, id_col: str,
-            impl: str = "kernel") -> DataFrame:
-    """64-bit SimHash over whitespace tokens: sign of the per-bit weighted
-    sum of token hashes. Returns (id, simhash long).
-
-    impl="kernel" (default): Arrow/numpy (blake2b token hashes) — MEASURED
-    10x faster than the pure-Catalyst variant here (0.14 s vs 1.35 s at
-    sf0.1: vectorized bit unpack beats 64 per-bit CASE sums).
-    impl="expr": zero-Python Catalyst twin — explode tokens, xxhash64, 64
-    per-bit CASE sums in one map-side-combinable groupBy, bits OR'd back;
-    empty docs get simhash 0."""
-    if impl == "expr":
-        toks = df.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
-        ).where(F.length("tok") > 0)
-        h = F.xxhash64("tok")
-        aggs = [
-            F.sum(F.when(F.shiftrightunsigned(h, b).bitwiseAND(F.lit(1)) == 1,
-                         1).otherwise(-1)).alias(f"_b{b}")
-            for b in range(64)
-        ]
-        per = toks.groupBy("id").agg(*aggs)
-        val = F.lit(0).cast("long")
-        for b in range(64):
-            bit = F.when(F.col(f"_b{b}") > 0, F.lit(1).cast("long")) \
-                   .otherwise(F.lit(0).cast("long"))
-            val = val.bitwiseOR(F.shiftleft(bit, b))
-        sigs = per.select("id", val.alias("simhash"))
-        ids = df.select(F.col(id_col).alias("id"))
-        return ids.join(sigs, "id", "left").select(
-            "id", F.coalesce("simhash", F.lit(0).cast("long")).alias("simhash"))
-    return simhash_kernel(df, text_col, id_col)
+_SIMHASH_TOKLEN = 12  # token hash covers the first 12 chars (prefix hash)
 
 
-def simhash_kernel(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Arrow/numpy simhash twin (blake2b token hashes)."""
-    import hashlib
+def portable_token_hash_sql(tok: str, maxlen: int = _SIMHASH_TOKLEN) -> str:
+    """Per-step-reduced polynomial hash over the rpad'ed token prefix —
+    parses identically in Spark SQL and DuckDB.  The mod at every step
+    keeps the accumulator < 2^31 * 131 + 0x10FFFF < 2^63 for any length."""
+    p = _PORTABLE_P
+    padded = f"rpad(substr({tok},1,{maxlen}), {maxlen}, chr(1))"
+    expr = f"CAST(ascii(substr({padded},1,1)) AS BIGINT)"
+    for i in range(2, maxlen + 1):
+        expr = f"((({expr}) % {p})*131 + ascii(substr({padded},{i},1)))"
+    return f"(({expr}) % {p})"
 
-    shifts = np.arange(64, dtype=np.uint64)
+
+def _simhash_bit_params(seed: int = 7):
+    return _portable_perm_params(64, seed)
+
+
+def _simhash_batch(texts, a, b) -> np.ndarray:
+    """int64 portable SimHash per text: bit k of the value is character
+    k+1 of the ``bits`` string simhash_portable_sql builds."""
+    a = np.asarray(a, dtype=np.uint64)
+    b = np.asarray(b, dtype=np.uint64)
+    # ~1k-doc chunks bound the (tokens x 64) temporaries
+    if len(texts) > 1024:
+        return np.concatenate([_simhash_batch(texts[i:i + 1024], a, b)
+                               for i in range(0, len(texts), 1024)])
+    L = _SIMHASH_TOKLEN
+    toks = [[w for w in (t or "").split(" ") if w] for t in texts]
+    n_tok = np.fromiter((len(x) for x in toks), dtype=np.uint64, count=len(toks))
+    flat = [w[:L].ljust(L, "\x01") for x in toks for w in x]
+    h = _poly_hash(_code_points(flat).reshape(-1, L).T)
+    x = a[:, None] * h[None, :] + b[:, None]  # (64, tokens)
+    _mod_p(x, np.empty_like(x))
+    # per-doc count of odd permuted hashes from prefix sums over the
+    # tokens (an empty doc spans no tokens and counts 0)
+    ones = np.zeros((len(a), len(flat) + 1), dtype=np.uint64)
+    np.cumsum(x & np.uint64(1), axis=1, out=ones[:, 1:])
+    ends = np.cumsum(n_tok)
+    odd = ones[:, ends] - ones[:, ends - n_tok]
+    bits = np.ascontiguousarray((2 * odd > n_tok).T)
+    return np.packbits(bits, axis=1, bitorder="little").view("<i8").ravel()
+
+
+def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, simhash long): 64-bit portable SimHash per row — see the
+    section note; every row gets a value, 0 for an empty or NULL text."""
+    a, b = _simhash_bit_params()
 
     @F.pandas_udf(LongType())
     def sim_udf(texts: pd.Series) -> pd.Series:
-        out = np.empty(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts):
-            toks = (t or "").split()
-            if not toks:
-                out[i] = 0
-                continue
-            hs = np.fromiter(
-                (int.from_bytes(hashlib.blake2b(tok.encode("utf-8", "ignore"),
-                                                digest_size=8).digest(), "little")
-                 for tok in toks),
-                dtype=np.uint64, count=len(toks))
-            bits = ((hs[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int64)
-            acc = np.where(bits == 1, 1, -1).sum(axis=0)
-            val = np.uint64(0)
-            for bit in range(64):
-                if acc[bit] > 0:
-                    val |= np.uint64(1) << np.uint64(bit)
-            out[i] = val.astype(np.int64) if hasattr(val, "astype") else np.int64(val)
-        return pd.Series(out)
+        return pd.Series(_simhash_batch(texts.tolist(), a, b))
 
     return df.select(F.col(id_col).alias("id"), sim_udf(F.col(text_col)).alias("simhash"))
 
@@ -712,7 +582,7 @@ def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str,
                        max_hamming: int = 3,
                        max_bucket: int | None = 4096) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming via banded
-    exact-match blocking.
+    exact-match blocking (``hamming_near_pairs`` over ``simhash``).
 
     Recall guarantee is pigeonhole: splitting 64 bits into
     ``bands = max_hamming + 1`` bands, any pair differing in <= max_hamming
@@ -725,9 +595,18 @@ def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str,
     the cap is dropped wholesale (see _drop_oversized_buckets), so pairs
     whose only agreeing band lands in such a bucket are lost.  Pass
     ``max_bucket=None`` for unconditional recall (quadratic risk on
-    boilerplate-heavy corpora)."""
+    boilerplate-heavy corpora) — the form simhash_portable_sql mirrors."""
     sh = simhash(df, text_col, id_col)
     return hamming_near_pairs(sh, "simhash", "id", max_hamming, max_bucket)
+
+
+def _band_layout(n_bands: int, nbits: int = 64):
+    """Band widths (wider first) and bit offsets splitting *nbits* bits as
+    evenly as possible."""
+    base, extra = divmod(nbits, n_bands)
+    widths = [base + (1 if i < extra else 0) for i in range(n_bands)]
+    offsets = [sum(widths[:i]) for i in range(n_bands)]
+    return widths, offsets
 
 
 def hamming_near_pairs(df: DataFrame, sig_col: str, id_col: str,
@@ -742,10 +621,7 @@ def hamming_near_pairs(df: DataFrame, sig_col: str, id_col: str,
     n_bands = max_hamming + 1
     if n_bands > 64:
         raise ValueError("max_hamming must be < 64 for 64-bit blocking")
-    # band widths: distribute 64 bits as evenly as possible (wider first)
-    base, extra = divmod(64, n_bands)
-    widths = [base + (1 if i < extra else 0) for i in range(n_bands)]
-    offsets = [sum(widths[:i]) for i in range(n_bands)]
+    widths, offsets = _band_layout(n_bands)
     sh = df.select(F.col(id_col).alias("id"), F.col(sig_col).alias("_sig"))
     bands = sh.select(
         "id", "_sig",
@@ -782,68 +658,6 @@ def hamming_near_pairs(df: DataFrame, sig_col: str, id_col: str,
                .select("id_a", "id_b", "hamming")
 
 
-# ---------------------------------------------------------------------------
-# SimHash, portable-hash variant (engine-agnostic arithmetic — see the
-# MinHash portable section note; same design goal: the q22 gate query is
-# bit-reproducible in DuckDB, moving it from rows-only to oracle-exact)
-# ---------------------------------------------------------------------------
-
-_SIMHASH_TOKLEN = 12  # token hash covers the first 12 chars (prefix hash)
-
-
-def portable_token_hash_sql(tok: str, maxlen: int = _SIMHASH_TOKLEN) -> str:
-    """Per-step-reduced polynomial hash over the rpad'ed token prefix —
-    parses identically in Spark SQL and DuckDB.  The mod at every step
-    keeps the accumulator < 2^31 * 131 + 2^16 < 2^63 for any length."""
-    p = _PORTABLE_P
-    padded = f"rpad(substr({tok},1,{maxlen}), {maxlen}, chr(1))"
-    expr = f"CAST(ascii(substr({padded},1,1)) AS BIGINT)"
-    for i in range(2, maxlen + 1):
-        expr = f"((({expr}) % {p})*131 + ascii(substr({padded},{i},1)))"
-    return f"(({expr}) % {p})"
-
-
-def _simhash_bit_params(seed: int = 7):
-    return _portable_perm_params(64, seed)
-
-
-def simhash_portable(df: DataFrame, text_col: str, id_col: str,
-                     seed: int = 7) -> DataFrame:
-    """(id, bits: 64-char '0'/'1' string) portable SimHash.
-
-    Tokens: split on single spaces, empties dropped (frequency-weighted —
-    token multiplicity counts, like the kernel impl).  Bit b's weight for
-    a token with hash h is 2*(((a_b*h + b_b) mod p) mod 2) - 1; the doc's
-    bit is 1 iff the summed weight is > 0 (ties -> 0).  Pure Catalyst."""
-    a, b = _simhash_bit_params(seed)
-    p = _PORTABLE_P
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), " ")).alias("tok"),
-    ).where(F.length("tok") > 0)
-    h = F.expr(portable_token_hash_sql("tok"))
-    aggs = [
-        F.sum((F.lit(a[k]) * h + F.lit(b[k])) % p % 2 * 2 - 1).alias(f"_s{k}")
-        for k in range(64)
-    ]
-    per = toks.groupBy("id").agg(*aggs)
-    bits = F.concat(*[
-        F.when(F.col(f"_s{k}") > 0, F.lit("1")).otherwise(F.lit("0"))
-        for k in range(64)
-    ])
-    sigs = per.select("id", bits.alias("bits"))
-    ids = df.select(F.col(id_col).alias("id"))
-    return ids.join(sigs, "id", "left").select(
-        "id", F.coalesce("bits", F.lit("0" * 64)).alias("bits"))
-
-
-def _band_layout(n_bands: int, nbits: int = 64):
-    base, extra = divmod(nbits, n_bands)
-    widths = [base + (1 if i < extra else 0) for i in range(n_bands)]
-    offsets = [sum(widths[:i]) for i in range(n_bands)]
-    return widths, offsets
-
-
 def _hamming_sql(a: str, b: str, nbits: int = 64) -> str:
     terms = " + ".join(
         f"(CASE WHEN substr({a},{i},1) <> substr({b},{i},1) THEN 1 ELSE 0 END)"
@@ -851,46 +665,14 @@ def _hamming_sql(a: str, b: str, nbits: int = 64) -> str:
     return f"CAST(({terms}) AS BIGINT)"
 
 
-def simhash_near_pairs_portable(
-    df: DataFrame, text_col: str, id_col: str,
-    max_hamming: int = 3, seed: int = 7,
-) -> DataFrame:
-    """simhash_near_pairs with portable hashing: banded exact-match blocking
-    over the bit string (pigeonhole: bands = max_hamming + 1 never drops a
-    qualifying pair), hamming verified positionally.  Zero UDFs."""
-    n_bands = max_hamming + 1
-    widths, offsets = _band_layout(n_bands)
-    sh = simhash_portable(df, text_col, id_col, seed)
-    bands = sh.select(
-        "id", "bits",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"),
-                     F.substring("bits", offsets[i] + 1, widths[i]).alias("key"))
-            for i in range(n_bands)
-        ])).alias("bb"),
-    ).select("id", "bits", "bb.band", "bb.key")
-    # see minhash_lsh_pairs: avoid recomputing the 64 sum-aggs per side
-    bands = bands.localCheckpoint(eager=False)
-    ba, bb = bands.alias("a"), bands.alias("b")
-    cand = (
-        ba.join(bb, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.bits").alias("_ba"), F.col("b.bits").alias("_bb"))
-        .distinct()
-    )
-    hamming = F.expr(_hamming_sql("_ba", "_bb"))
-    return (cand.withColumn("hamming", hamming)
-            .where(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming"))
-
-
 def simhash_portable_sql(
     table: str, text_col: str, id_col: str,
     max_hamming: int = 3, seed: int = 7,
 ) -> str:
-    """DuckDB twin of simhash_near_pairs_portable — same literals, same
-    tokenization, bit-identical signatures, candidates and hamming."""
+    """DuckDB twin of simhash_near_pairs (the q22 oracle) — same literals
+    and tokenization: character k+1 of its ``bits`` is bit k of
+    ``simhash``, and its candidates and hamming equal the operator's with
+    ``max_bucket=None``."""
     a, b = _simhash_bit_params(seed)
     p = _PORTABLE_P
     n_bands = max_hamming + 1

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from karta_spark.operators.dedup import _PORTABLE_P, _portable_perm_params
+
 STOPWORDS = {
     "en": ("the", "and", "of", "to", "in", "is", "that", "with"),
     "de": ("der", "die", "das", "und", "ist", "nicht", "mit", "ein"),
@@ -551,16 +553,7 @@ def stratified_sample(df: DataFrame, strata_cols: list[str], id_col: str,
     sliver came up short of min(cap, n) reruns unfiltered (probability
     ~exp(-cap*(safety-1)^2/2) per stratum; ~1e-10 at cap=40, safety=4)."""
     from pyspark.sql import Window
-    from karta_spark.operators.dedup import _PORTABLE_P
-    import random as _random
-    rng = _random.Random(seed)
-    a, b = rng.randrange(1, _PORTABLE_P), rng.randrange(0, _PORTABLE_P)
-    # reduce the id mod P BEFORE the multiply: a < 2^31 and id%P < 2^31
-    # keep the product < 2^62, so ids beyond ~4.3e9 (the web-scale case)
-    # don't overflow int64 — Spark would wrap silently where DuckDB errors,
-    # breaking the cross-engine reproducibility this operator promises
-    h = ((F.lit(a) * (F.col(id_col).cast("long") % F.lit(_PORTABLE_P))
-          + F.lit(b)) % F.lit(_PORTABLE_P))
+    h = _portable_affine(id_col, seed)[0]
     w = Window.partitionBy(*strata_cols).orderBy(h.asc(), F.col(id_col).asc())
 
     def ranked(frame: DataFrame) -> DataFrame:
@@ -605,10 +598,7 @@ def stratified_sample(df: DataFrame, strata_cols: list[str], id_col: str,
 def stratified_sample_sql(table: str, strata_cols: list[str], id_col: str,
                           cap: int, seed: int = 13) -> str:
     """DuckDB twin of stratified_sample — same seeded affine hash."""
-    from karta_spark.operators.dedup import _PORTABLE_P
-    import random as _random
-    rng = _random.Random(seed)
-    a, b = rng.randrange(1, _PORTABLE_P), rng.randrange(0, _PORTABLE_P)
+    a, b = _affine_params(seed)
     strata = ", ".join(strata_cols)
     return f"""
 WITH ranked AS (
@@ -861,13 +851,21 @@ FROM c
 """
 
 
+def _affine_params(seed: int):
+    """(a, b) of the seeded id hash — the one draw every sampler and its
+    SQL twin share (the first MinHash permutation of the same seed)."""
+    a, b = _portable_perm_params(1, seed)
+    return a[0], b[0]
+
+
 def _portable_affine(id_col: str, seed: int):
-    """Seeded engine-portable hash h(id) = (a*(id%P)+b) % P — the same
-    family stratified_sample uses (products < 2^62, no int64 wrap)."""
-    from karta_spark.operators.dedup import _PORTABLE_P
-    import random as _random
-    rng = _random.Random(seed)
-    a, b = rng.randrange(1, _PORTABLE_P), rng.randrange(0, _PORTABLE_P)
+    """Seeded engine-portable hash h(id) = (a*(id%P)+b) % P as a Column.
+
+    The id is reduced mod P BEFORE the multiply: a < 2^31 and id%P < 2^31
+    keep the product < 2^62, so ids beyond ~4.3e9 (the web-scale case)
+    don't overflow int64 — Spark would wrap silently where DuckDB errors,
+    breaking the cross-engine reproducibility the samplers promise."""
+    a, b = _affine_params(seed)
     h = ((F.lit(a) * (F.col(id_col).cast("long") % F.lit(_PORTABLE_P))
           + F.lit(b)) % F.lit(_PORTABLE_P))
     return h, a, b, _PORTABLE_P
@@ -976,10 +974,7 @@ def token_budget_sample_sql(table: str, source_col: str, token_expr: str,
     two-pass plan reproduces exactly (minus the cum_before column for
     non-boundary rows, which the Spark plan leaves NULL by design; align
     on (source, id, n_tokens) for value comparison)."""
-    from karta_spark.operators.dedup import _PORTABLE_P
-    import random as _random
-    rng = _random.Random(seed)
-    a, b = rng.randrange(1, _PORTABLE_P), rng.randrange(0, _PORTABLE_P)
+    a, b = _affine_params(seed)
     return f"""
 WITH t AS (
   SELECT {source_col} AS source, {id_col} AS id,

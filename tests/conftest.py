@@ -4,6 +4,7 @@ import pytest
 @pytest.fixture(scope="session")
 def spark():
     from karta_spark.session import get_spark
-    s = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    # local[$SPARK_GRAFT_CPUS] with as many shuffle partitions (see session.py)
+    s = get_spark("tests")
     yield s
     s.stop()

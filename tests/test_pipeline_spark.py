@@ -113,28 +113,16 @@ class TestDedup:
         assert (0, 1) in pairs or (1, 3) in pairs  # near dup
         assert all(a not in (2, 4) and b not in (2, 4) for a, b in pairs)
 
-    def test_minhash_portable_matches_kernel(self, spark):
-        """The portable-hash pipeline (engine-agnostic arithmetic, the q21
-        oracle twin) finds the same verified near-dup pairs as the crc32
-        kernel impl — different hash families, same exact-Jaccard verify, so
-        pair sets agree wherever LSH recall does (planted dups at j~1.0)."""
-        kw = dict(num_perm=64, bands=16, shingle=3, threshold=0.5)
-        docs = self._docs(spark)
-        portable = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
-                    dedup.minhash_lsh_pairs_portable(docs, "text", "doc_id", **kw).collect()}
-        assert (0, 3) in portable and portable[(0, 3)] == pytest.approx(1.0)
-        kernel = {(r["id_a"], r["id_b"]) for r in dedup.minhash_lsh_pairs(
-            docs, "text", "doc_id", **kw).collect()}
-        assert set(portable) == kernel
-
     def test_minhash_portable_sql_twin(self, spark):
-        """The DuckDB twin reproduces the Spark pipeline bit-for-bit:
+        """The DuckDB twin reproduces minhash_lsh_pairs bit-for-bit:
         same candidates (probabilistic LSH included), same Jaccard."""
         import duckdb
         kw = dict(num_perm=64, bands=16, shingle=3, threshold=0.5)
         docs = self._docs(spark)
-        got = sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in
-                     dedup.minhash_lsh_pairs_portable(docs, "text", "doc_id", **kw).collect())
+        out = dedup.minhash_lsh_pairs(docs, "text", "doc_id", max_bucket=None, **kw)
+        got = sorted((r["id_a"], r["id_b"], r["j"]) for r in out.select(
+            "id_a", "id_b", F.round("jaccard", 6).alias("j")).collect())
+        assert (0, 3, 1.0) in got
         con = duckdb.connect()
         con.register("documents", docs.toPandas())
         sql = dedup.minhash_portable_sql("documents", "text", "doc_id", **kw)
@@ -148,21 +136,47 @@ class TestDedup:
         assert pairs.get((0, 3)) == 0  # identical docs -> identical simhash
 
     def test_simhash_portable_and_sql_twin(self, spark):
-        """Portable simhash: identical docs collide at hamming 0, unrelated
-        docs are excluded at a tight threshold, and the DuckDB twin
-        reproduces the full pipeline (signatures, blocking, hamming)
+        """Identical docs collide at hamming 0, and the DuckDB twin
+        reproduces simhash_near_pairs (signatures, blocking, hamming)
         bit-for-bit."""
         import duckdb
         docs = self._docs(spark)
         got = sorted((r["id_a"], r["id_b"], r["hamming"]) for r in
-                     dedup.simhash_near_pairs_portable(
-                         docs, "text", "doc_id", max_hamming=6).collect())
+                     dedup.simhash_near_pairs(
+                         docs, "text", "doc_id", max_hamming=6,
+                         max_bucket=None).collect())
         assert (0, 3, 0) in got  # identical docs -> identical signature
         con = duckdb.connect()
         con.register("documents", docs.toPandas())
         sql = dedup.simhash_portable_sql("documents", "text", "doc_id", max_hamming=6)
         want = sorted(tuple(t) for t in con.execute(sql).fetchall())
         assert got == want
+
+    def test_simhash_bits_match_sql(self, spark):
+        """Bit k of ``simhash`` is character k+1 of the SQL twin's
+        ``bits``: an empty or NULL doc is 0, runs of spaces yield no
+        empty tokens, and a non-BMP token hashes by code point."""
+        import duckdb
+        # one partition, so one Arrow batch mixes empty docs (first,
+        # between and last) with tokenized ones
+        df = spark.createDataFrame([
+            (0, ""), (1, None), (3, "alpha  beta   alpha "), (2, "   "),
+            (4, "alpha beta alpha"),
+            (5, "emoji \U0001F600x tok \U0001F600x"),
+            (6, "a-very-long-token-beyond-twelve chars"), (7, ""),
+        ], "doc_id long, text string").coalesce(1)
+        got = {r["id"]: r["simhash"] for r in
+               dedup.simhash(df, "text", "doc_id").collect()}
+        con = duckdb.connect()
+        con.register("documents", df.toPandas())
+        sql = dedup.simhash_portable_sql("documents", "text", "doc_id")
+        sigs = sql[:sql.index(",\nbanded AS")] + "\nSELECT id, bits FROM sigs"
+        want = dict(con.execute(sigs).fetchall())
+        assert set(got) == set(want)
+        for i, bits in want.items():
+            assert format(got[i] & (2**64 - 1), "064b")[::-1] == bits, i
+        assert got[0] == got[1] == got[2] == got[7] == 0
+        assert got[3] == got[4] != 0
 
     def test_simhash_portable_recall_midrange(self, spark):
         """A planted pair at hamming 4..8 survives the 9-band blocking
@@ -172,15 +186,15 @@ class TestDedup:
         rows.append((100, "alpha beta gamma delta epsilon zeta eta theta"))
         rows.append((101, "alpha beta gamma delta epsilon zeta eta iota"))
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        sigs = {r["id"]: r["bits"] for r in
-                dedup.simhash_portable(df, "text", "doc_id").collect()}
-        brute = sorted(
-            (a, b, sum(ca != cb for ca, cb in zip(sigs[a], sigs[b])))
-            for a in sigs for b in sigs if a < b)
+        sigs = {r["id"]: r["simhash"] & (2**64 - 1) for r in
+                dedup.simhash(df, "text", "doc_id").collect()}
+        brute = sorted((a, b, (sigs[a] ^ sigs[b]).bit_count())
+                       for a in sigs for b in sigs if a < b)
         want = [(a, b, h) for a, b, h in brute if h <= 8]
         got = sorted((r["id_a"], r["id_b"], r["hamming"]) for r in
-                     dedup.simhash_near_pairs_portable(
-                         df, "text", "doc_id", max_hamming=8).collect())
+                     dedup.simhash_near_pairs(
+                         df, "text", "doc_id", max_hamming=8,
+                         max_bucket=None).collect())
         assert got == want
         assert any(4 <= h <= 8 for _, _, h in got) or (100, 101) in {
             (a, b) for a, b, _ in got}

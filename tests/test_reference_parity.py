@@ -34,6 +34,75 @@ OTT = (-75.69, 45.42)
 WHI = (-135.05, 60.72)
 
 
+def _angle_diff(u: float, v: float) -> float:
+    return abs((u - v + 180.0) % 360.0 - 180.0)
+
+
+def _mp_geodesic_direct(lat1, az1, sig12, a, f):
+    """Direct geodesic problem at mpmath precision, from the exact
+    auxiliary-sphere integrals (Karney 2013 eqs. 5-8; no series):
+    (lat2, lambda12, az2, s12) in radians and metres for a geodesic
+    leaving lat1 at azimuth az1 over spherical arc sig12."""
+    import mpmath as mp
+    ep2 = f * (2 - f) / (1 - f) ** 2
+    beta1 = mp.atan((1 - f) * mp.tan(lat1))
+    salp0 = mp.sin(az1) * mp.cos(beta1)
+    calp0 = mp.hypot(mp.cos(az1), mp.sin(az1) * mp.sin(beta1))
+    sig1 = mp.atan2(mp.sin(beta1), mp.cos(az1) * mp.cos(beta1))
+    sig2 = sig1 + sig12
+    k2 = ep2 * calp0 ** 2
+    lat2 = mp.atan2(calp0 * mp.sin(sig2),
+                    (1 - f) * mp.hypot(salp0, calp0 * mp.cos(sig2)))
+    omg12 = (mp.atan2(salp0 * mp.sin(sig2), mp.cos(sig2))
+             - mp.atan2(salp0 * mp.sin(sig1), mp.cos(sig1)))
+    i3 = mp.quad(lambda s: (2 - f) / (1 + (1 - f) * mp.sqrt(1 + k2 * mp.sin(s) ** 2)),
+                 [sig1, sig2])
+    s12 = a * (1 - f) * mp.quad(lambda s: mp.sqrt(1 + k2 * mp.sin(s) ** 2), [sig1, sig2])
+    return lat2, omg12 - f * salp0 * i3, mp.atan2(salp0, calp0 * mp.cos(sig2)), s12
+
+
+def _mp_geodesic_inverse(x1, y1, x2, y2, starts, a, f):
+    """(az_deg, back_az_deg, s12_m) by 2-D Newton on (az1, sig12) over
+    ``_mp_geodesic_direct`` at 30 digits, from each (az_deg, s_m) start;
+    the shortest converged geodesic wins."""
+    import mpmath as mp
+    with mp.workdps(30):
+        a, f = mp.mpf(a), mp.mpf(f)
+        lat1, lat2 = mp.radians(y1), mp.radians(y2)
+        dlam = mp.radians(mp.mpf(x2) - x1)
+
+        def wrap(t):
+            return mp.atan2(mp.sin(t), mp.cos(t))
+
+        def resid(u):
+            got_lat, lam12, _, _ = _mp_geodesic_direct(lat1, u[0], u[1], a, f)
+            return mp.matrix([got_lat - lat2, wrap(lam12 - dlam)])
+
+        best, h = None, mp.mpf(10) ** -15
+        for az0, s0 in starts:
+            u = mp.matrix([mp.radians(az0), mp.mpf(s0) / (a * (1 - f))])
+            for _ in range(20):
+                r = resid(u)
+                if mp.norm(r) < mp.mpf(10) ** -22:
+                    break
+                J = mp.matrix(2, 2)
+                for j in range(2):
+                    du = mp.matrix(u)
+                    du[j] += h
+                    J[:, j] = (resid(du) - r) / h
+                u -= mp.lu_solve(J, r)
+            else:
+                continue
+            if u[1] <= 0:
+                continue
+            _, _, az2, s12 = _mp_geodesic_direct(lat1, u[0], u[1], a, f)
+            if best is None or s12 < best[2]:
+                best = (float(mp.degrees(wrap(u[0]))),
+                        float(mp.degrees(wrap(az2 + mp.pi))), float(s12))
+    assert best is not None, "no start converged"
+    return best
+
+
 def _poly_df(spark, verts, gid=0):
     rows = [(gid, i, float(x), float(y)) for i, (x, y) in enumerate(verts)]
     return spark.createDataFrame(rows, "geom_id long, idx long, x double, y double")
@@ -318,44 +387,36 @@ class TestGeodesicParity:
         assert abs(S[0]) / 1e6 == pytest.approx(84275623.42235, abs=5e-5)
 
     def test_karney_inverse_matches_reference_solver(self):
-        """Behavioral equality against the reference's runnable
-        ellipsoidal_inverse (pure python) on a randomized ensemble plus
-        the crs_tests near-antipodal case — azimuths to 1e-8 deg,
-        distance to 1e-6 m."""
-        import importlib.util
-        import sys
-        import types
-        import warnings
-        pkg = types.ModuleType("karta_ref")
-        pkg.__path__ = ["/root/reference/karta"]
-        sys.modules.setdefault("karta_ref", pkg)
-        errmod = types.ModuleType("karta_ref.errors")
-        errmod.NoIntersection = type("NoIntersection", (Exception,), {})
-        sys.modules.setdefault("karta_ref.errors", errmod)
-        spec = importlib.util.spec_from_file_location(
-            "karta_ref.geodesy", "/root/reference/karta/geodesy.py")
-        ref = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(ref)
+        """Behavioral equality against an independent high-precision
+        solve (``_mp_geodesic_inverse``: Newton on the exact direct
+        problem, started from the Vincenty kernel) on a randomized
+        ensemble plus the crs_tests near-antipodal case — azimuths to
+        1e-8 deg, distance to 1e-6 m."""
         a, b = 6378137.0, 6356752.314245
         f = (a - b) / a
         rng = np.random.default_rng(7)
         checked = 0
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            for _ in range(60):
-                x1, x2 = rng.uniform(-180, 180, 2)
-                y1, y2 = rng.uniform(-89, 89, 2)
-                want = ref.ellipsoidal_inverse(a, b, x1, y1, x2, y2)
-                got = K.karney_inverse_scalar(x1, y1, x2, y2, a=a, f=f)
-                assert abs(got[0] - want[0]) < 1e-8
-                assert abs(got[1] - want[1]) < 1e-8
-                assert abs(got[2] - want[2]) < 1e-6
-                checked += 1
-            want = ref.ellipsoidal_inverse(a, b, 0.0, 30.0, 179.9999, -29.9999)
-            got = K.karney_inverse_scalar(0.0, 30.0, 179.9999, -29.9999,
-                                          a=a, f=f)
-            assert got == pytest.approx(want, abs=1e-7)  # crs_tests.py:210-216
+        for _ in range(60):
+            x1, x2 = rng.uniform(-180, 180, 2)
+            y1, y2 = rng.uniform(-89, 89, 2)
+            az0, _, s0 = K.vincenty_inverse(x1, y1, x2, y2, a=a, f=f)
+            want = _mp_geodesic_inverse(x1, y1, x2, y2, [(az0[0], s0[0])], a, f)
+            got = K.karney_inverse_scalar(x1, y1, x2, y2, a=a, f=f)
+            assert _angle_diff(got[0], want[0]) < 1e-8
+            assert _angle_diff(got[1], want[1]) < 1e-8
+            assert abs(got[2] - want[2]) < 1e-6
+            checked += 1
         assert checked == 60
+        # crs_tests.py:210-216.  Vincenty does not converge this close to
+        # antipodal, so the solve also starts from every 45 deg and keeps
+        # the shortest geodesic it finds
+        az0, _, s0 = K.vincenty_inverse(0.0, 30.0, 179.9999, -29.9999, a=a, f=f)
+        starts = [(az0[0], s0[0])] + [(az, s0[0]) for az in range(0, 360, 45)]
+        want = _mp_geodesic_inverse(0.0, 30.0, 179.9999, -29.9999, starts, a, f)
+        got = K.karney_inverse_scalar(0.0, 30.0, 179.9999, -29.9999, a=a, f=f)
+        assert _angle_diff(got[0], want[0]) < 1e-8
+        assert _angle_diff(got[1], want[1]) < 1e-8
+        assert abs(got[2] - want[2]) < 1e-6
 
     def test_geodesic_area_operator(self, spark):
         """geometry.geodesic_area (Polygon.area's geographic arm,

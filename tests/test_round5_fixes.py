@@ -64,28 +64,42 @@ class TestKnnBoundaryTies:
 
 
 class TestShingleHashesSurrogates:
-    """ADVICE r4 (low): utf-8 'ignore' encoding can SHRINK below n (lone
-    surrogates encode to b''), which made L negative and np.zeros crash."""
+    """ADVICE r4 (low): texts whose grams need padding — lone surrogates,
+    empty and short texts — must reach the MinHash kernel without a crash
+    and with the SQL twin's rpad(chr(1)) gram rule."""
+
+    @staticmethod
+    def _sig(texts, n=3):
+        from karta_spark.operators.dedup import (_minhash_sig_batch,
+                                                 _portable_perm_params)
+        return _minhash_sig_batch(texts, n, *_portable_perm_params(64, 42))
 
     def test_lone_surrogate_text(self):
-        from karta_spark.operators.dedup import _shingle_hashes
-        out = _shingle_hashes("\ud800\ud801\ud802\ud803\ud804", 3)
-        assert isinstance(out, np.ndarray)
-        assert out.dtype == np.uint64
-        assert len(out) >= 1  # padded NUL gram, not a crash
+        from karta_spark.operators.dedup import _PORTABLE_P
+        t = "\ud800\ud801\ud802\ud803\ud804"
+        out = self._sig([t])
+        assert out.shape == (1, 64) and out.dtype == np.int64
+        assert ((out >= 0) & (out < _PORTABLE_P)).all()
+        # each surrogate is its own code point: the signature is the min
+        # over the text's three windows, each hashed alone
+        windows = self._sig([t[i:i + 3] for i in range(3)])
+        assert np.array_equal(out[0], windows.min(axis=0))
 
     def test_empty_and_short_text(self):
-        from karta_spark.operators.dedup import _shingle_hashes
-        assert len(_shingle_hashes("", 3)) == 1
-        assert len(_shingle_hashes("a", 3)) == 1
+        # NULL and "" are one all-pad gram; "a" is "a" rpad'ed with chr(1)
+        got = self._sig([None, "", "\x01\x01\x01", "a", "a\x01\x01"])
+        assert np.array_equal(got[0], got[2])
+        assert np.array_equal(got[1], got[2])
+        assert np.array_equal(got[3], got[4])
+        assert not np.array_equal(got[2], got[3])
 
     def test_normal_text_unchanged(self):
-        from karta_spark.operators.dedup import _shingle_hashes
-        h1 = _shingle_hashes("hello world", 3)
-        h2 = _shingle_hashes("hello world", 3)
-        assert np.array_equal(h1, h2)
-        assert len(h1) == len(set("hello world"[i:i + 3]
-                                  for i in range(len("hello world") - 2)))
+        # a doc's signature does not depend on the batch around it
+        # (length buckets, chunking, padding of its neighbours)
+        alone = self._sig(["hello world"])
+        batched = self._sig(["x", "hello world", "a much longer text " * 40])
+        assert np.array_equal(alone[0], batched[1])
+        assert np.array_equal(alone, self._sig(["hello world"]))
 
 
 class TestPseudoMercatorWkt:

@@ -187,16 +187,37 @@ class TestBatchedDecodeStats:
             assert g["pix_std"] == float(pix.std())
             assert g["psnr_vs_ref"] == im.psnr(pix, ref)
 
+
+def _sql_gram_hash(g: str) -> int:
+    """portable_gram_hash_sql, transcribed: per-step-mod polynomial."""
+    from karta_spark.operators.dedup import _PORTABLE_P as P
+    acc = ord(g[0])
+    for ch in g[1:]:
+        acc = (acc % P) * 131 + ord(ch)
+    return acc % P
+
+
+def _sql_sig(t, n: int, a, b) -> list:
+    """One row of minhash_portable_sql's ``sig`` CTE, transcribed per doc:
+    coalesce to '', DISTINCT rpad(substr(t, i, n), n, chr(1)) grams for i
+    in 1..greatest(length - (n-1), 1), then min((a_j*h + b_j) % p)."""
+    from karta_spark.operators.dedup import _PORTABLE_P as P
+    t = t or ""
+    grams = {t[i:i + n].ljust(n, "\x01")
+             for i in range(max(len(t) - (n - 1), 1))}
+    hs = [_sql_gram_hash(g) for g in grams]
+    return [min((aj * h + bj) % P for h in hs) for aj, bj in zip(a, b)]
+
+
+class TestMinhashBatchKernel:
     def test_minhash_batch_kernel_bit_equal(self):
-        """_minhash_sig_batch must reproduce the per-doc reference form
-        min((a*h + b) mod 2^64) over _shingle_hashes EXACTLY, including
-        the padding rules (empty text, text shorter than the shingle,
-        lone surrogates that utf-8-'ignore' away) and length outliers
+        """_minhash_sig_batch must equal the SQL twin's ``sig`` CTE
+        EXACTLY, including the padding rules (NULL, empty text, text
+        shorter than the shingle, lone surrogates) and length outliers
         that cross the kernel's bucket boundaries."""
-        from karta_spark.operators.dedup import (_minhash_params,
-                                                 _minhash_sig_batch,
-                                                 _shingle_hashes)
-        a, b = _minhash_params(64, 42)
+        from karta_spark.operators.dedup import (_minhash_sig_batch,
+                                                 _portable_perm_params)
+        a, b = _portable_perm_params(64, 42)
         rng = np.random.default_rng(7)
         vocab = ["batch", "part", "spark", "line", "order", "小", "héllo"]
         texts = [None, "", "a", "ab", "\ud800\ud801", "aaaaaa"]
@@ -208,6 +229,4 @@ class TestBatchedDecodeStats:
             got = _minhash_sig_batch(texts, n, a, b)
             assert got.shape == (len(texts), 64)
             for i, t in enumerate(texts):
-                hv = _shingle_hashes(t or "", n)
-                ref = (hv[None, :] * a[:, None] + b[:, None]).min(axis=1)
-                assert np.array_equal(got[i], ref.view(np.int64)), (n, i, t)
+                assert got[i].tolist() == _sql_sig(t, n, a, b), (n, i, t)

@@ -8,7 +8,9 @@ events + documents + embeddings); layout matches the driver's too: ONE
 parquet file with ONE row group per table, which is exactly the
 single-task-scan shape the round-8 operator guards must handle.
 
-Usage:  python tools/gen_sf.py 1.0 /root/testdata/sf1.0
+Usage:  python tools/gen_sf.py SF OUT_DIR    (e.g. 1.0 /tmp/sf1.0)
+
+OUT_DIR is required: the shipped test data directory is read-only.
 """
 
 from __future__ import annotations
@@ -167,6 +169,6 @@ def generate(sf: float, out_dir: str, seed: int = 42) -> None:
 
 
 if __name__ == "__main__":
-    sf = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
-    out = sys.argv[2] if len(sys.argv) > 2 else f"/root/testdata/sf{sys.argv[1]}"
-    generate(sf, out)
+    if len(sys.argv) != 3:
+        sys.exit("usage: python tools/gen_sf.py SF OUT_DIR")
+    generate(float(sys.argv[1]), sys.argv[2])
