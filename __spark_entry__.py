@@ -1842,10 +1842,12 @@ def q21_minhash_pairs(spark, sf_dir):
     the DuckDB oracle replicates literally — so the WHOLE pipeline
     (signatures, band buckets, candidate set, exact Jaccard verify) is
     oracle-checked bit-for-bit, and it is the function bench.py times.
-    Jaccard is rounded to 6 places, as the oracle rounds it."""
+    Jaccard is rounded to 6 places, as the oracle rounds it.  The oracle
+    caps no bucket, so neither does the gate (max_bucket=None)."""
     d = _t(spark, sf_dir, "documents")
     out = dedup.minhash_lsh_pairs(
-        d, "text", "doc_id", num_perm=64, bands=8, shingle=6, threshold=0.5)
+        d, "text", "doc_id", num_perm=64, bands=8, shingle=6, threshold=0.5,
+        max_bucket=None)
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 

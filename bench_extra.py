@@ -31,11 +31,6 @@ HEADLINE = [
 ]
 
 
-def _qs():
-    import __spark_entry__ as entry
-    return entry.queries()
-
-
 def _noop(df):
     df.write.format("noop").mode("overwrite").save()
 
@@ -48,7 +43,8 @@ def get_session():
 
 def time_queries(only=None, runs=2):
     spark = get_session()
-    qs = _qs()
+    import __spark_entry__ as entry
+    qs = entry.queries()
     names = [n for n in HEADLINE if only is None or n == only]
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     times = {}
@@ -70,7 +66,8 @@ def time_queries(only=None, runs=2):
 def dump_plans(tag: str, only=None):
     os.makedirs("plans/r08", exist_ok=True)
     spark = get_session()
-    qs = _qs()
+    import __spark_entry__ as entry
+    qs = entry.queries()
     names = [n for n in HEADLINE if only is None or n == only]
     for name in names:
         df = qs[name](spark, SF_DIR)

@@ -436,14 +436,14 @@ def minhash_lsh_pairs(
 
     # exact-Jaccard verify as pure Catalyst set algebra (array_intersect /
     # array_union on distinct shingle arrays) — zero Python on the verify
-    # path; a short text (len < shingle) contributes its single truncated
-    # gram, where the SQL twin rpads it with chr(1) — the same set sizes
-    # and intersections unless a text itself contains chr(1)
+    # path; grams are rpad'ed with chr(1) like the signature kernel's and
+    # the SQL twin's, so a short text has the same single padded gram
     def gram_set(col):
         t = F.coalesce(col, F.lit(""))
         idx = F.sequence(F.lit(1),
                          F.greatest(F.length(t) - (shingle - 1), F.lit(1)))
-        return F.array_distinct(F.transform(idx, lambda i: t.substr(i, F.lit(shingle))))
+        return F.array_distinct(F.transform(
+            idx, lambda i: F.rpad(t.substr(i, F.lit(shingle)), shingle, "\x01")))
 
     ga, gb = gram_set(F.col("t_a")), gram_set(F.col("t_b"))
     jac = (F.size(F.array_intersect(ga, gb)).cast("double")

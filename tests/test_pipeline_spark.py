@@ -115,14 +115,21 @@ class TestDedup:
 
     def test_minhash_portable_sql_twin(self, spark):
         """The DuckDB twin reproduces minhash_lsh_pairs bit-for-bit:
-        same candidates (probabilistic LSH included), same Jaccard."""
+        same candidates (probabilistic LSH included), same Jaccard.
+        Texts shorter than the shingle verify on the same chr(1)-padded
+        gram the signatures hash: 'ab' and 'ab\\x01' (and NULL and '')
+        are one gram apiece, so they pair at Jaccard 1.0."""
         import duckdb
         kw = dict(num_perm=64, bands=16, shingle=3, threshold=0.5)
-        docs = self._docs(spark)
+        short = spark.createDataFrame(
+            [(10, "ab"), (11, "ab\x01"), (12, None), (13, ""), (14, "xyz"),
+             (15, "a"), (16, "q")], "doc_id long, text string")
+        docs = self._docs(spark).unionByName(short)
         out = dedup.minhash_lsh_pairs(docs, "text", "doc_id", max_bucket=None, **kw)
         got = sorted((r["id_a"], r["id_b"], r["j"]) for r in out.select(
             "id_a", "id_b", F.round("jaccard", 6).alias("j")).collect())
         assert (0, 3, 1.0) in got
+        assert (10, 11, 1.0) in got and (12, 13, 1.0) in got
         con = duckdb.connect()
         con.register("documents", docs.toPandas())
         sql = dedup.minhash_portable_sql("documents", "text", "doc_id", **kw)

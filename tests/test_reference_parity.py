@@ -391,7 +391,8 @@ class TestGeodesicParity:
         solve (``_mp_geodesic_inverse``: Newton on the exact direct
         problem, started from the Vincenty kernel) on a randomized
         ensemble plus the crs_tests near-antipodal case — azimuths to
-        1e-8 deg, distance to 1e-6 m."""
+        1e-8 deg, distance to 1e-6 m (1e-7 m on the near-antipodal
+        case, as crs_tests.py holds it)."""
         a, b = 6378137.0, 6356752.314245
         f = (a - b) / a
         rng = np.random.default_rng(7)
@@ -416,7 +417,7 @@ class TestGeodesicParity:
         got = K.karney_inverse_scalar(0.0, 30.0, 179.9999, -29.9999, a=a, f=f)
         assert _angle_diff(got[0], want[0]) < 1e-8
         assert _angle_diff(got[1], want[1]) < 1e-8
-        assert abs(got[2] - want[2]) < 1e-6
+        assert abs(got[2] - want[2]) < 1e-7
 
     def test_geodesic_area_operator(self, spark):
         """geometry.geodesic_area (Polygon.area's geographic arm,
