@@ -1425,10 +1425,10 @@ def q49_ivf_static(spark, sf_dir):
 
 
 def _q50_tris():
-    """120 seeded triangles — deliberately MORE than both large-set
-    thresholds (MAX_EXPR_POLYS=48, DISTRIBUTED_COVER_THRESHOLD=96) so the
-    gate exercises the many-polygon machinery: executor-built cover,
-    AQE-decided cover join, pair-batched packed winding kernel."""
+    """120 seeded triangles — deliberately MORE than MAX_EXPR_POLYS=48, so
+    the gate exercises the Arrow arm: its small cover (bbox cells x row
+    bytes far under the broadcast threshold) builds on the driver and
+    broadcast-joins, then the pair-batched packed winding kernel refines."""
     rng = np.random.default_rng(50)
     tris = []
     for i in range(120):
@@ -1444,9 +1444,11 @@ def _q50_tris():
 
 def q50_pip_many_polys(spark, sf_dir):
     """Per-polygon containment counts against 120 seeded triangles — the
-    large-polygon-set PIP path (distributed cover + packed Arrow kernel)
-    under the oracle: the SQL twin recomputes every triangle's membership
-    with the literal winding form."""
+    large-polygon-set PIP path (driver-built broadcast cover + packed Arrow
+    kernel) under the oracle: the SQL twin recomputes every triangle's
+    membership with the literal winding form.  The executor-built arm
+    returns identical rows (tests/test_round2_fixes.py), so this oracle
+    covers it transitively."""
     c = with_coords(_t(spark, sf_dir, "customer"), "c_custkey")
     polys = [PolygonSpec(pid, v, crs="lonlat") for pid, v in _q50_tris()]
     joined = pip_join.point_in_polygon_join(

@@ -7,21 +7,21 @@ as a Spark plan:
 
 1. points get an int64 ``cell_id`` (slippy tile at a chosen zoom) — a pure
    column expression, JVM-side;
-2. polygons are *covered* with cells at the same zoom (driver-side numpy —
-   polygon sets are the broadcast-small side).  Cover cells are classified
-   ``full`` (entirely inside: join hit needs no refine) or ``boundary``
-   (needs the exact winding test) — this is the distributed analogue of the
-   quadtree's interior/leaf split and skips the kernel for most matches;
-3. ``points ⋈ cover`` on cell_id — Catalyst broadcast hash join (the cover
-   table is tiny); no shuffle of the point table at all;
+2. polygons are *covered* with cells at the same zoom, in three classes:
+   ``full`` (entirely inside: a hit needs no refine), ``boundary`` (needs
+   the exact winding test) and outside (dropped: no edge crosses the cell
+   and all four corners are outside) — the distributed analogue of the
+   quadtree's interior/leaf split, after Raster Intervals' full/partial
+   cells;
+3. ``points ⋈ cover`` on cell_id.  One rule, from a size observed before
+   any cover is built (bbox cell ranges x cover-row bytes vs
+   ``spark.sql.autoBroadcastJoinThreshold``), picks the arm: a cover that
+   fits builds on the driver in numpy and broadcast-joins (the point table
+   never shuffles); a larger one builds on executors and AQE plans the join;
 4. boundary candidates go through the vectorized winding-number kernel
-   (kernels.winding_contains — bit-identical to contains.pyx:13-42) inside
-   an Arrow-batched pandas UDF.
-
-Scale notes (100 TB): the big side is never shuffled — the join is
-broadcast; the refine UDF sees only boundary-cell candidates (a thin
-O(perimeter) slice); hot cells can additionally be salted (operators.skew)
-when the polygon side must itself be distributed.
+   (kernels.winding_contains — bit-identical to contains.pyx:13-42), as a
+   compiled Catalyst CASE for small polygon sets or inside an Arrow-batched
+   pandas UDF.
 """
 
 from __future__ import annotations
@@ -127,32 +127,25 @@ def _mark_edges(mark: np.ndarray, rings, to_frac):
 
 
 def _classify_cover(poly: PolygonSpec, nx: int, ny: int, corner_x, corner_y,
-                    to_frac) -> np.ndarray:
-    """(ny, nx) bool 'full' grid: all 4 corners inside and no edge marked.
-
-    The batched replacement for the old per-cell classify loop (a 10k-
-    polygon layer stalled the driver); corner containment is one vectorized
+                    to_frac):
+    """Flat x-major (full, keep) bool arrays over the (ny, nx) grid.  A cell
+    no edge marks lies wholly inside or wholly outside: *full* when its 4
+    corners are inside, dropped (keep False) when all 4 are outside — exact,
+    no point of it is contained.  Corner containment is one vectorized
     winding pass over the (ny+1)x(nx+1) corner lattice."""
     if poly.polar:
-        return np.zeros((ny, nx), dtype=bool)
+        return np.zeros(nx * ny, dtype=bool), np.ones(nx * ny, dtype=bool)
     CX, CY = np.meshgrid(corner_x, corner_y)  # (ny+1, nx+1)
     inside = poly.contains(CX.ravel(), CY.ravel()).reshape(ny + 1, nx + 1)
-    full = (inside[:-1, :-1] & inside[:-1, 1:]
-            & inside[1:, :-1] & inside[1:, 1:])
+    corners = (inside[:-1, :-1].astype(np.int8) + inside[:-1, 1:]
+               + inside[1:, :-1] + inside[1:, 1:])
     mark = np.zeros((ny, nx), dtype=bool)
     _mark_edges(mark, (poly.outer, *poly.holes), to_frac)
-    return full & ~mark
+    return ((corners == 4) & ~mark).T.ravel(), ((corners > 0) | mark).T.ravel()
 
 
-def cover_cells(poly: PolygonSpec, zoom: int):
-    """Classified slippy-cell cover of a lonlat polygon at *zoom*.
-
-    Returns list of (cell_id, full: bool). A cell is *full* when all four
-    corners are inside and no polygon edge can cross it (conservative
-    supercover edge test) — candidate rows in full cells skip the exact
-    refine. Polar polygons fall back to boundary-everything (rare path,
-    parity over speed).
-    """
+def _tile_range(poly: PolygonSpec, zoom: int):
+    """(x0, y0, nx, ny): the slippy tiles of *poly*'s bbox at *zoom*."""
     xmin, ymin, xmax, ymax = poly.bbox()
     if poly.polar:
         # a polar ring encloses a pole BEYOND its vertex latitudes, and
@@ -173,13 +166,32 @@ def cover_cells(poly: PolygonSpec, zoom: int):
     nmax = 2 ** zoom - 1
     x0, x1 = max(x0, 0), min(x1, nmax)
     y0, y1 = max(y0, 0), min(y1, nmax)
-    nx, ny = x1 - x0 + 1, y1 - y0 + 1
+    return x0, y0, x1 - x0 + 1, y1 - y0 + 1
+
+
+def _planar_range(poly: PolygonSpec, size: float):
+    """(cx0, cy0, nx, ny): the planar grid cells of *poly*'s bbox."""
+    xmin, ymin, xmax, ymax = poly.bbox()
+    cx0, cy0 = math.floor(xmin / size), math.floor(ymin / size)
+    return (cx0, cy0, math.floor(xmax / size) - cx0 + 1,
+            math.floor(ymax / size) - cy0 + 1)
+
+
+def cover_cells(poly: PolygonSpec, zoom: int):
+    """Classified slippy-cell cover of a lonlat polygon at *zoom*.
+
+    Returns (cell_id int64, full bool) arrays of the three-class cover
+    (_classify_cover; conservative supercover edge test): rows in full
+    cells skip the exact refine, outside cells are left out.  Polar
+    polygons fall back to boundary-everything (rare path, parity over
+    speed)."""
+    x0, y0, nx, ny = _tile_range(poly, zoom)
     if nx <= 0 or ny <= 0:
-        return []
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=bool)
     n = float(2 ** zoom)
     # corner lattice in world coords (tile.py:20-33 inverse web-mercator)
-    tx = np.arange(x0, x1 + 2, dtype=np.float64)
-    ty = np.arange(y0, y1 + 2, dtype=np.float64)
+    tx = np.arange(x0, x0 + nx + 1, dtype=np.float64)
+    ty = np.arange(y0, y0 + ny + 1, dtype=np.float64)
     corner_x = tx / n * 360.0 - 180.0
     corner_y = np.degrees(np.arctan(np.sinh(math.pi * (1.0 - 2.0 * ty / n))))
 
@@ -192,22 +204,18 @@ def cover_cells(poly: PolygonSpec, zoom: int):
               / math.pi) / 2.0 * n - y0
         return fx, fy
 
-    full = _classify_cover(poly, nx, ny, corner_x, corner_y, to_frac)
-    # vectorized cell-id build: (cells x 2) columns, no per-cell Python
+    full, keep = _classify_cover(poly, nx, ny, corner_x, corner_y, to_frac)
+    # vectorized x-major cell-id build, no per-cell Python
     cc, rr = np.meshgrid(np.arange(nx, dtype=np.int64),
                          np.arange(ny, dtype=np.int64), indexing="ij")
     cids = (zoom << 58) | ((x0 + cc.ravel()) << 29) | (y0 + rr.ravel())
-    return list(zip(cids.tolist(), full.T.ravel().tolist()))
+    return cids[keep], full[keep]
 
 
 def cover_cells_planar(poly: PolygonSpec, size: float):
-    """Classified planar-grid cover (cartesian CRS, arbitrary units)."""
-    xmin, ymin, xmax, ymax = poly.bbox()
-    cx0 = int(math.floor(xmin / size))
-    cx1 = int(math.floor(xmax / size))
-    cy0 = int(math.floor(ymin / size))
-    cy1 = int(math.floor(ymax / size))
-    nx, ny = cx1 - cx0 + 1, cy1 - cy0 + 1
+    """Classified planar-grid cover (cartesian CRS, arbitrary units), as
+    cover_cells returns it."""
+    cx0, cy0, nx, ny = _planar_range(poly, size)
     corner_x = (cx0 + np.arange(nx + 1, dtype=np.float64)) * size
     corner_y = (cy0 + np.arange(ny + 1, dtype=np.float64)) * size
 
@@ -215,13 +223,13 @@ def cover_cells_planar(poly: PolygonSpec, size: float):
         return (np.asarray(x, dtype=np.float64) / size - cx0,
                 np.asarray(y, dtype=np.float64) / size - cy0)
 
-    full = _classify_cover(poly, nx, ny, corner_x, corner_y, to_frac)
+    full, keep = _classify_cover(poly, nx, ny, corner_x, corner_y, to_frac)
     cc, rr = np.meshgrid(np.arange(nx, dtype=np.int64),
                          np.arange(ny, dtype=np.int64), indexing="ij")
     # same id algebra as cells.planar_cell_py evaluated at each cell center
     cids = ((cx0 + cc.ravel() + cells._PLANAR_OFFSET) * (1 << 29)
             + (cy0 + rr.ravel() + cells._PLANAR_OFFSET))
-    return list(zip(cids.tolist(), full.T.ravel().tolist()))
+    return cids[keep], full[keep]
 
 
 def winding_col(ring: np.ndarray, x, y):
@@ -307,14 +315,46 @@ def _pack_rings(polys: list[PolygonSpec]):
     return {p.poly_id: j for j, p in enumerate(packable)}, R
 
 
-# above this many polygons the cover is built on executors, not the driver
-DISTRIBUTED_COVER_THRESHOLD = 96
-
 _COVER_SCHEMA = "poly_id string, cell_id long, full boolean"
 # specs cross the Arrow boundary as pickled bytes: the 3-deep nested-list
 # schema (holes: array<array<array<double>>>) segfaults pyarrow's
 # arrow_to_pandas in this environment, and a binary column is also cheaper
 _SPEC_SCHEMA = "spec binary"
+
+
+def _fits_broadcast(spark: SparkSession, polys: list[PolygonSpec],
+                    zoom: int, planar_size: float | None = None) -> bool:
+    """Whether the cover of *polys* fits spark.sql.autoBroadcastJoinThreshold
+    (-1: never).  Decided before any cover is built and without a Spark
+    job: the rows are bounded by the sum of the polygons' bbox cell ranges
+    (the grid cover_cells classifies), times the bytes of one cover row."""
+    rows = 0
+    for p in polys:
+        _, _, nx, ny = (_planar_range(p, planar_size) if planar_size is not None
+                        else _tile_range(p, zoom))
+        rows += max(nx, 0) * max(ny, 0)
+    # UnsafeRow layout: a null-bitmap word, one word per column (poly_id,
+    # cell_id, full, pidx) and the poly_id bytes rounded up to words
+    row_bytes = 40 + 8 * max((-(-len(p.poly_id.encode()) // 8) for p in polys),
+                             default=0)
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return rows * row_bytes <= limit
+
+
+def _cover_table(specs, zoom: int, planar_size: float | None) -> pd.DataFrame:
+    """(poly_id, cell_id, full, pidx) cover rows of (pidx, PolygonSpec)
+    pairs, assembled by numpy concatenation of the per-polygon arrays."""
+    covers = [cover_cells_planar(p, planar_size) if planar_size is not None
+              else cover_cells(p, zoom) for _, p in specs]
+    counts = [len(cids) for cids, _ in covers]
+    return pd.DataFrame({
+        "poly_id": np.repeat(np.array([p.poly_id for _, p in specs],
+                                      dtype=object), counts),
+        "cell_id": np.concatenate([np.empty(0, np.int64)]
+                                  + [cids for cids, _ in covers]),
+        "full": np.concatenate([np.empty(0, bool)] + [f for _, f in covers]),
+        "pidx": np.repeat(np.array([j for j, _ in specs], dtype=np.int32),
+                          counts)})
 
 
 def cover_df(spark: SparkSession, polys: list[PolygonSpec], zoom: int,
@@ -325,60 +365,27 @@ def cover_df(spark: SparkSession, polys: list[PolygonSpec], zoom: int,
     a downstream Arrow kernel can key on a 4-byte int instead of
     re-serializing the poly_id string per candidate row.
 
-    Small sets build on the driver (numpy per polygon — cheap, and the
-    result is broadcast anyway).  Above DISTRIBUTED_COVER_THRESHOLD the
-    per-polygon cover computation moves into a mapInPandas stage over a
-    polygon-spec DataFrame: only the O(#polys) spec rows ever leave the
-    driver, and the O(#cells) cover rows are produced on executors — a 10k-
-    polygon layer at zoom 12 (~10^7 cover rows) never materializes
-    driver-side (VERDICT round-1 'What's missing' #6)."""
+    A cover that fits the broadcast threshold (_fits_broadcast) builds on
+    the driver as one Arrow batch, with no Spark job.  A larger one is
+    built on executors by a mapInPandas stage over a one-batch polygon-spec
+    table: only the O(#polys) specs leave the driver, and the O(#cells)
+    cover rows never materialize driver-side."""
     schema = _COVER_SCHEMA + (", pidx int" if with_pidx else "")
-    if len(polys) <= DISTRIBUTED_COVER_THRESHOLD:
-        pids, cids, fulls, pidxs = [], [], [], []
-        for j, p in enumerate(polys):
-            cover = (cover_cells_planar(p, planar_size)
-                     if planar_size is not None else cover_cells(p, zoom))
-            for cid, full in cover:
-                pids.append(p.poly_id)
-                cids.append(cid)
-                fulls.append(full)
-                pidxs.append(j)
-        # one Arrow batch instead of a pickled row list: the row path costs
-        # ~40 ms of driver latency per plan construction at a few hundred
-        # cover cells (r8 measurement); columnar conversion is ~constant
-        out = {"poly_id": pd.Series(pids, dtype=object),
-               "cell_id": pd.array(cids, dtype="int64"),
-               "full": pd.array(fulls, dtype=bool)}
-        if with_pidx:
-            out["pidx"] = pd.array(pidxs, dtype="int32")
-        return spark.createDataFrame(pd.DataFrame(out), schema)
+    cols = [f.split()[0] for f in schema.split(", ")]
+    if _fits_broadcast(spark, polys, zoom, planar_size):
+        return spark.createDataFrame(
+            _cover_table(list(enumerate(polys)), zoom, planar_size)[cols], schema)
 
-    spec_rows = [
-        (pickle.dumps((j, p.poly_id, p.outer, p.holes, p.crs)),)
-        for j, p in enumerate(polys)
-    ]
-    n_slices = min(len(polys), spark.sparkContext.defaultParallelism * 4)
-    spec = spark.createDataFrame(spec_rows, _SPEC_SCHEMA).repartition(n_slices)
+    spec = spark.createDataFrame(pd.DataFrame({"spec": [
+        pickle.dumps((j, p.poly_id, p.outer, p.holes, p.crs))
+        for j, p in enumerate(polys)]}), _SPEC_SCHEMA)
+    spec = spec.repartition(min(len(polys), spark.sparkContext.defaultParallelism * 4))
 
     def build(batches):
         for pdf in batches:
-            pids, cids, fulls, pidxs = [], [], [], []
-            for blob in pdf["spec"]:
-                j, pid, outer, holes, crs = pickle.loads(blob)
-                p = PolygonSpec(pid, outer, holes, crs)
-                cover = (cover_cells_planar(p, planar_size)
-                         if planar_size is not None else cover_cells(p, zoom))
-                for cid, full in cover:
-                    pids.append(pid)
-                    cids.append(cid)
-                    fulls.append(full)
-                    pidxs.append(j)
-            out = {"poly_id": pids,
-                   "cell_id": pd.array(cids, dtype="int64"),
-                   "full": fulls}
-            if with_pidx:
-                out["pidx"] = pd.array(pidxs, dtype="int32")
-            yield pd.DataFrame(out)
+            specs = [(j, PolygonSpec(pid, outer, holes, crs))
+                     for j, pid, outer, holes, crs in map(pickle.loads, pdf["spec"])]
+            yield _cover_table(specs, zoom, planar_size)[cols]
 
     return spec.mapInPandas(build, schema)
 
@@ -461,7 +468,9 @@ def point_in_polygon_join(
         # cells pass outright; boundary cells evaluate the compiled
         # per-polygon winding expression (codegen short-circuits on `full`)
         cover = cover_df(spark, expr_polys, zoom, planar_size)
-        cand = pts.join(F.broadcast(cover), "cell_id", "inner")
+        if _fits_broadcast(spark, expr_polys, zoom, planar_size):
+            cover = F.broadcast(cover)
+        cand = pts.join(cover, "cell_id", "inner")
         refine_case = F.lit(False)
         for p in expr_polys:
             refine_case = F.when(
@@ -481,7 +490,7 @@ def point_in_polygon_join(
             for j, p in enumerate(udf_polys):
                 pack_row[j] = pk_index.get(p.poly_id, -1)
         poly_list = list(udf_polys)
-        small_set = len(udf_polys) <= DISTRIBUTED_COVER_THRESHOLD
+        small_set = _fits_broadcast(spark, udf_polys, zoom, planar_size)
         cover = cover_df(spark, udf_polys, zoom, planar_size, with_pidx=True)
 
         @F.pandas_udf(BooleanType())
@@ -531,12 +540,12 @@ def point_in_polygon_join(
             )
             branches.append(full_hits.unionByName(boundary_hits))
         else:
-            # large polygon set: the cover may exceed broadcast size, so the
-            # join is left to AQE (shuffle on cell_id when big).  A
-            # full/boundary branch union would run that shuffle join TWICE
-            # (verified in the physical plan) — instead join once and let
-            # the kernel pass full rows through without compute: one Arrow
-            # round-trip beats a second shuffle of the point table
+            # the cover exceeds broadcast size, so the join is left to AQE
+            # (shuffle on cell_id when big).  A full/boundary branch union
+            # would run that shuffle join TWICE (verified in the physical
+            # plan) — instead join once and let the kernel pass full rows
+            # through without compute: one Arrow round-trip beats a second
+            # shuffle of the point table
             cand = pts.join(cover, "cell_id", "inner")
             branches.append(
                 cand.where(refine(F.col("pidx"), F.col(lon), F.col(lat),
@@ -710,19 +719,10 @@ def point_in_polygon_join_table(
 
     def build(batches):
         for pdf in batches:
-            pids, cids, fulls = [], [], []
-            for pid, rx, ry in zip(pdf["_pid"], pdf["_rx"], pdf["_ry"]):
-                outer = np.column_stack([np.asarray(rx, dtype=np.float64),
-                                         np.asarray(ry, dtype=np.float64)])
-                p = PolygonSpec(pid, outer, (), "lonlat")
-                for cid, full in cover_cells(p, zoom):
-                    pids.append(pid)
-                    cids.append(cid)
-                    fulls.append(full)
-            yield pd.DataFrame(
-                {"_pid": pids,
-                 "cell_id": pd.array(cids, dtype="int64"),
-                 "full": fulls})
+            specs = [(0, PolygonSpec(pid, np.column_stack([rx, ry]), (), "lonlat"))
+                     for pid, rx, ry in zip(pdf["_pid"], pdf["_rx"], pdf["_ry"])]
+            yield _cover_table(specs, zoom, None).drop(columns="pidx").rename(
+                columns={"poly_id": "_pid"})
 
     cover = ring.select("_pid", "_rx", "_ry").mapInPandas(
         build, "_pid string, cell_id long, full boolean")

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = ("stage string, part_id long, row_count long, "
                   "wall_ms double, finished_at double")
+_LINEAGE_COLS = [f.split()[0] for f in LINEAGE_SCHEMA.split(", ")]
 
 
 class _MetricsAccum(AccumulatorParam):
@@ -112,7 +113,9 @@ def run_stage(
     for rec in acc.value:
         seen.setdefault(rec[1], rec)
     rows = sorted(seen.values(), key=lambda r: r[1])
-    spark.createDataFrame(rows or [], LINEAGE_SCHEMA) \
+    # one pandas/Arrow batch: a row list would run a job through a Python
+    # worker just to pickle a handful of rows
+    spark.createDataFrame(pd.DataFrame(rows, columns=_LINEAGE_COLS), LINEAGE_SCHEMA) \
         .coalesce(1).write.mode("overwrite").parquet(lineage_path)
 
     with open(_marker(root, stage), "w") as f:
@@ -149,8 +152,7 @@ def lineage_table(spark: SparkSession, root: str, stage: str) -> DataFrame:
                     rows.append(json.load(f))
         if rows:
             return spark.createDataFrame(
-                pd.DataFrame(rows, columns=["stage", "part_id", "row_count",
-                                            "wall_ms", "finished_at"]))
+                pd.DataFrame(rows, columns=_LINEAGE_COLS))
     return spark.createDataFrame([], LINEAGE_SCHEMA)
 
 

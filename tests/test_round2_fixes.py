@@ -10,6 +10,7 @@ Each test pins one defect named in VERDICT.md / ADVICE.md round 1:
 """
 
 import math
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -19,6 +20,22 @@ from karta_spark.functions.kernels import sample_bilinear, sample_nearest
 from karta_spark.operators import dedup, knn
 from karta_spark.raster.sampling import sample_join
 from karta_spark.raster.tiles import grid_to_df
+
+
+@contextmanager
+def _no_broadcast(spark):
+    """autoBroadcastJoinThreshold=-1 inside the block, so every PIP cover
+    takes the executor-built arm; the session's own value comes back."""
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 class TestKnnGuarantee:
@@ -255,6 +272,16 @@ class TestClusterSafeLineage:
         assert len({r["part_id"] for r in lt}) == len(lt)  # deduped
         assert all(r["wall_ms"] >= 0 for r in lt)
 
+    def test_empty_stage_writes_empty_lineage(self, spark, tmp_path):
+        """An empty input checkpoints too: its lineage table (one pandas
+        batch with no rows) is written and reads back with the schema."""
+        from karta_spark.plans import lineage
+        root = str(tmp_path / "ck_empty")
+        assert lineage.run_stage(spark.range(0), root, "s0").count() == 0
+        lt = lineage.lineage_table(spark, root, "s0")
+        assert lt.collect() == []
+        assert lt.schema == spark.createDataFrame([], lineage.LINEAGE_SCHEMA).schema
+
 
 class TestBatchedCover:
     """VERDICT item 10: cover building must not stall the driver at 10k
@@ -266,25 +293,40 @@ class TestBatchedCover:
         return np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
 
     def test_full_cells_are_truly_full(self, spark):
+        """Full cells hold only contained points, and the bbox cells the
+        three-class cover leaves out hold none."""
         from karta_spark.fixtures import flagship_polys
         from karta_spark.functions import cells as kcells
         from karta_spark.operators.pip_join import PolygonSpec, cover_cells
         rng = np.random.default_rng(8)
+        # a hole spanning whole z6 cells (~5.6 deg) and a polygon inside one
+        ring = np.array([[-40.0, -30.0], [40.0, -30.0], [40.0, 30.0], [-40.0, 30.0]])
         polys = list(flagship_polys()) + [
-            PolygonSpec("star", self._star(20.0, 30.0, 14.0), crs="lonlat")]
+            PolygonSpec("star", self._star(20.0, 30.0, 14.0), crs="lonlat"),
+            PolygonSpec("holed", ring, holes=(ring[::-1] * 0.5,), crs="lonlat"),
+            PolygonSpec("tiny", self._star(100.3, 10.3, 0.4), crs="lonlat")]
         for p in polys:
-            cover = cover_cells(p, 6)
-            n_full = 0
-            for cid, full in cover:
-                if not full:
-                    continue
-                n_full += 1
+            cids, fulls = cover_cells(p, 6)
+            xmin, ymin, xmax, ymax = p.bbox()
+            x0, y1 = kcells.tile_xy_py(xmin, ymin, 6)
+            x1, y0 = kcells.tile_xy_py(xmax, ymax, 6)
+            bbox_cells = {(6 << 58) | (x << 29) | y
+                          for x in range(x0, x1 + 1) for y in range(y0, y1 + 1)}
+            left_out = bbox_cells - set(cids.tolist())
+            for cid in list(cids[fulls]) + sorted(left_out):
                 z, x, y = cid >> 58, (cid >> 29) & ((1 << 29) - 1), cid & ((1 << 29) - 1)
                 w, s, e, n = kcells.tile_bbox_py(z, x, y)
-                sx = rng.uniform(w, e, 50)
-                sy = rng.uniform(s, n, 50)
-                assert p.contains(sx, sy).all(), (p.poly_id, cid)
-            assert n_full > 0, f"{p.poly_id}: cover produced no full cells"
+                inside = p.contains(rng.uniform(w, e, 50), rng.uniform(s, n, 50))
+                if cid in left_out:
+                    assert not inside.any(), (p.poly_id, cid)
+                else:
+                    assert inside.all(), (p.poly_id, cid)
+            if p.poly_id == "tiny":
+                assert len(cids) >= 1 and not fulls.any()
+            else:
+                assert fulls.any(), f"{p.poly_id}: cover produced no full cells"
+            if p.poly_id in ("holed", "star"):
+                assert left_out, f"{p.poly_id}: no bbox cell left out"
 
     def test_join_matches_bruteforce_many_polys(self, spark):
         from karta_spark.operators.pip_join import PolygonSpec, point_in_polygon_join
@@ -309,25 +351,27 @@ class TestBatchedCover:
         assert got == want
 
     def test_distributed_cover_equals_driver_cover(self, spark):
-        """Above DISTRIBUTED_COVER_THRESHOLD cover rows are produced by a
-        mapInPandas stage; the table must be identical to the driver-side
-        build (same ids, same full/boundary classification)."""
+        """A cover over the broadcast threshold is produced by a mapInPandas
+        stage; the table must be identical to the driver-side build (same
+        ids, same full/boundary classification)."""
         from karta_spark.operators import pip_join as pj
         rng = np.random.default_rng(5)
         polys = [
             pj.PolygonSpec(f"d{i:03d}", self._star(
                 rng.uniform(-150, 150), rng.uniform(-55, 55),
                 rng.uniform(2, 7)), crs="lonlat")
-            for i in range(pj.DISTRIBUTED_COVER_THRESHOLD + 24)
+            for i in range(120)
         ]
         # force one polygon through the holes arm too
         sq = np.array([[-10.0, -10.0], [10.0, -10.0], [10.0, 10.0], [-10.0, 10.0]])
         polys.append(pj.PolygonSpec("dhole", sq * 2.0, holes=(sq,), crs="lonlat"))
-        dist = {(r["poly_id"], r["cell_id"], r["full"])
-                for r in pj.cover_df(spark, polys, zoom=6).collect()}
+        with _no_broadcast(spark):
+            cover = pj.cover_df(spark, polys, zoom=6)
+            assert "MapInPandas" in _plan(cover)
+            dist = {(r["poly_id"], r["cell_id"], r["full"]) for r in cover.collect()}
         driver = set()
         for p in polys:
-            for cid, full in pj.cover_cells(p, 6):
+            for cid, full in zip(*pj.cover_cells(p, 6)):
                 driver.add((p.poly_id, cid, full))
         assert dist == driver
 
@@ -340,25 +384,74 @@ class TestBatchedCover:
             pj.PolygonSpec(f"c{i:03d}", self._star(
                 rng.uniform(-1000, 1000), rng.uniform(-1000, 1000),
                 rng.uniform(20, 90)), crs="cartesian")
-            for i in range(pj.DISTRIBUTED_COVER_THRESHOLD + 10)
+            for i in range(106)
         ]
         size = 25.0
-        dist = {(r["poly_id"], r["cell_id"], r["full"]) for r in
-                pj.cover_df(spark, polys, zoom=0, planar_size=size).collect()}
-        driver = {(p.poly_id, cid, full)
-                  for p in polys for cid, full in pj.cover_cells_planar(p, size)}
+        with _no_broadcast(spark):
+            cover = pj.cover_df(spark, polys, zoom=0, planar_size=size)
+            assert "MapInPandas" in _plan(cover)
+            dist = {(r["poly_id"], r["cell_id"], r["full"]) for r in cover.collect()}
+        driver = {(p.poly_id, cid, full) for p in polys
+                  for cid, full in zip(*pj.cover_cells_planar(p, size))}
         assert dist == driver
 
+    def test_many_polys_small_cover_builds_on_driver(self, spark):
+        """The cover size, not the polygon count, picks the arm: 130 polygons
+        (more than the old count threshold of 96) with a small cover plan a
+        driver-built broadcast cover — no MapInPandas, a BroadcastHashJoin,
+        zero Spark jobs to build — and with the threshold at -1 the same
+        call takes the executor arm and returns equal rows."""
+        from karta_spark.operators import pip_join as pj
+        rng = np.random.default_rng(44)
+        polys = [pj.PolygonSpec(f"b{i:03d}", self._star(
+            rng.uniform(-150, 150), rng.uniform(-55, 55), rng.uniform(2, 7)),
+            crs="lonlat") for i in range(130)]
+        pts = [(j, float(x), float(y)) for j, (x, y) in enumerate(
+            zip(rng.uniform(-170, 170, 3000), rng.uniform(-70, 70, 3000)))]
+        df = spark.createDataFrame(pts, "pid long, x double, y double")
+        sc = spark.sparkContext
+        sc.setJobGroup("pip_driver_cover", "plan construction only")
+        try:
+            joined = pj.point_in_polygon_join(df, polys, zoom=6)
+            jobs = sc.statusTracker().getJobIdsForGroup("pip_driver_cover")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs == []
+        plan = _plan(joined)
+        assert "MapInPandas" not in plan and "BroadcastHashJoin" in plan
+        got = {(r["pid"], r["poly_id"]) for r in joined.collect()}
+        with _no_broadcast(spark):
+            forced = pj.point_in_polygon_join(df, polys, zoom=6)
+            assert "MapInPandas" in _plan(forced)
+            assert got == {(r["pid"], r["poly_id"]) for r in forced.collect()}
+        assert len(got) > 50
+
+    def test_q50_rows_equal_under_both_arms(self, spark, tmp_path):
+        """q50 gates the driver-built cover against DuckDB; its rows under
+        the executor arm are identical, so that arm stays covered by the
+        same oracle."""
+        import __spark_entry__ as entry
+        spark.range(3000).withColumnRenamed("id", "c_custkey") \
+            .write.parquet(str(tmp_path / "customer.parquet"))
+        driver = entry.q50_pip_many_polys(spark, str(tmp_path))
+        assert "MapInPandas" not in _plan(driver)
+        rows = sorted(map(tuple, driver.collect()))
+        with _no_broadcast(spark):
+            executor = entry.q50_pip_many_polys(spark, str(tmp_path))
+            assert "MapInPandas" in _plan(executor)
+            assert sorted(map(tuple, executor.collect())) == rows
+        assert len(rows) > 10
+
     def test_shuffle_join_arm_matches_broadcast(self, spark):
-        """With auto-broadcast disabled, the large-set branch must take the
-        sort-merge-join arm (cover too 'big' to broadcast) and produce the
-        identical join result — pins the SMJ code path AQE normally hides
-        by broadcasting test-sized covers."""
+        """With auto-broadcast disabled, the Arrow arm must take the
+        executor-built cover and the sort-merge-join arm (cover too 'big'
+        to broadcast) and produce the identical join result — pins the SMJ
+        code path AQE normally hides by broadcasting test-sized covers."""
         from karta_spark.operators import pip_join as pj
         rng = np.random.default_rng(31)
         polys = [pj.PolygonSpec(f"s{i:03d}", self._star(
             rng.uniform(-150, 150), rng.uniform(-55, 55), rng.uniform(2, 7)),
-            crs="lonlat") for i in range(pj.DISTRIBUTED_COVER_THRESHOLD + 10)]
+            crs="lonlat") for i in range(106)]
         # concentrate points so one cell is hot (the skew shape a 100 TB
         # corpus produces); correctness must be distribution-independent
         pts = [(j, float(x), float(y)) for j, (x, y) in enumerate(zip(
@@ -369,13 +462,9 @@ class TestBatchedCover:
         df = spark.createDataFrame(pts, "pid long, x double, y double")
         baseline = {(r["pid"], r["poly_id"]) for r in
                     pj.point_in_polygon_join(df, polys, zoom=6).collect()}
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        with _no_broadcast(spark):
             forced = {(r["pid"], r["poly_id"]) for r in
                       pj.point_in_polygon_join(df, polys, zoom=6).collect()}
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         assert forced == baseline
         assert len(baseline) > 500  # hot-cell points actually landed in polys
 
@@ -510,7 +599,7 @@ class TestBatchedCover:
         for i in range(1000):
             cx, cy = rng.uniform(-150, 150), rng.uniform(-55, 55)
             p = PolygonSpec(f"w{i}", self._star(cx, cy, 6.0, k=24), crs="lonlat")
-            total += len(cover_cells(p, 7))
+            total += len(cover_cells(p, 7)[0])
         dt = time.monotonic() - t0
         assert total > 10_000  # real covers, not trivial ones
         assert dt < 20.0, f"1k-polygon cover took {dt:.1f}s"
@@ -670,25 +759,24 @@ class TestBucketedCoLocation:
         import numpy as np
         from karta_spark.plans import layout
         spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         rng = np.random.default_rng(1)
         mk = lambda n, tag: spark.createDataFrame(  # noqa: E731
             [(f"{tag}{i}", float(x), float(y)) for i, (x, y) in enumerate(
                 zip(rng.uniform(-170, 170, n), rng.uniform(-80, 80, n)))],
             f"{tag}_id string, x double, y double")
-        layout.write_bucketed(mk(500, "a"), "bk_a", n_buckets=8, fine_zoom=4)
-        layout.write_bucketed(mk(400, "b"), "bk_b", n_buckets=8, fine_zoom=4)
-        try:
-            a = spark.table("bk_a")
-            b = spark.table("bk_b")
-            j = a.join(b, "cell_id").groupBy("cell_id").count()
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            # a shuffle join shape, with NO exchange anywhere above the
-            # scans: the bucket spec satisfies the join's distribution
-            assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-            assert "Exchange" not in plan
-            assert j.count() > 0
-        finally:
-            spark.sql("DROP TABLE IF EXISTS bk_a")
-            spark.sql("DROP TABLE IF EXISTS bk_b")
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+        with _no_broadcast(spark):
+            layout.write_bucketed(mk(500, "a"), "bk_a", n_buckets=8, fine_zoom=4)
+            layout.write_bucketed(mk(400, "b"), "bk_b", n_buckets=8, fine_zoom=4)
+            try:
+                a = spark.table("bk_a")
+                b = spark.table("bk_b")
+                j = a.join(b, "cell_id").groupBy("cell_id").count()
+                plan = j._jdf.queryExecution().executedPlan().toString()
+                # a shuffle join shape, with NO exchange anywhere above the
+                # scans: the bucket spec satisfies the join's distribution
+                assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+                assert "Exchange" not in plan
+                assert j.count() > 0
+            finally:
+                spark.sql("DROP TABLE IF EXISTS bk_a")
+                spark.sql("DROP TABLE IF EXISTS bk_b")

@@ -97,10 +97,10 @@ sections.append(("q48 spherical geodesic area (canonical-configuration trig "
                  "as one codegen'd expression over the segments window)",
                  plan_of(m.q48_geodesic_area(spark, sf), 30)))
 
-# 11. q50 large polygon set: executor-built cover (MapInPandas), single
-# cover join (no per-branch re-execution), packed Arrow winding kernel
-sections.append(("q50 many-polygon PIP (distributed cover -> single "
-                 "AQE-decided join -> pair-batched packed winding kernel)",
+# 11. q50 large polygon set: its small cover builds on the driver (no
+# MapInPandas) and broadcast-joins; full cells skip the packed Arrow kernel
+sections.append(("q50 many-polygon PIP (driver-built broadcast cover -> "
+                 "full/boundary union -> pair-batched packed winding kernel)",
                  plan_of(m.q50_pip_many_polys(spark, sf), 35)))
 
 # 12. q51 decontamination: gram explode both sides, broadcast semi-join —
